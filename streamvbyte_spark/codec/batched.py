@@ -25,27 +25,30 @@ codecs (VECTOR_COST_CODECS) so driver-facing formats are stable; passing
 VECTOR_COST_CODECS_FULL adds fsst to the argmin (the auto_full_* queries),
 and ``codec='auto_sorted'`` adds Elias-Fano on rows that are
 non-decreasing (row_sorted_mask gate; the auto_sorted_* queries — r7).
+
+Decode is one pass for the svb family: decode_rows decodes every svb,
+svb0124 and svb_delta row of a batch, mixed or not, in ONE _svb_decode_rows
+pass that reads each row in place from the encoded buffer (no per-codec
+subset copy), picks the row's length table by its codec, writes every value
+straight to its final slot and runs the prefix sum on the svb_delta rows
+only.  Every other codec decodes through its ``_DECODERS`` kernel, one call
+per codec present.  The round-trip fingerprint (fingerprint_rows) folds
+with block-relative weights, 31^(e-g) = 31^(e-bB) * 31^-(g-bB) mod p, so
+its per-value work is a widen, one multiply by a fixed table and two
+segment sums — no division and no per-value exponent array.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 
 from . import companions, core, select
 
-_PLACE16 = np.array([1, 4, 16, 64], dtype=np.uint16)
-_SHIFTS = np.array([0, 2, 4, 6], dtype=np.uint8)
 _LEN_0124 = np.array([0, 1, 2, 4], dtype=np.int64)
-_LEN_0124_U8 = np.array([0, 1, 2, 4], dtype=np.uint8)
 # value mask by data-byte length 0..4
 _MASK_BY_LEN = np.array([0, 0xFF, 0xFFFF, 0xFFFFFF, 0xFFFFFFFF], dtype=np.uint32)
-# control byte -> its 4 two-bit codes as 4 little-endian bytes: ONE u32
-# gather from a cache-resident 256-entry LUT replaces two shift+and passes
-# over the K x 4 unpacked array (the NumPy analog of the reference decoder's
-# shuffle-table lookup, src/streamvbyte_shuffle_tables_decode.h)
-_CTRL_CODES_U32 = np.array(
-    [(b & 3) | (((b >> 2) & 3) << 8) | (((b >> 4) & 3) << 16)
-     | (((b >> 6) & 3) << 24) for b in range(256)], dtype="<u4")
 
 
 def _row_base_at(ends: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -215,9 +218,96 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
     return out[:total_out], out_offsets
 
 
+def _quad_tables():
+    """Decode tables indexed by 256 * scheme0124 + control byte: each
+    quad's lane byte offsets (the exclusive prefix of its 4 value lengths;
+    column 4 = the quad's whole data length) and its 4 lane value masks.
+    One lookup per control byte replaces the per-value length
+    classification and per-value length cumsum of a value-at-a-time decoder
+    — the NumPy analog of the reference's shuffle-mask + length tables
+    (src/streamvbyte_shuffle_tables_decode.h)."""
+    codes = (np.arange(256)[:, None] >> (2 * np.arange(4))) & 3
+    lens = np.concatenate([codes + 1, _LEN_0124[codes]])
+    prefix = np.zeros((512, 5), np.intp)
+    np.cumsum(lens, axis=1, out=prefix[:, 1:])
+    return prefix, _MASK_BY_LEN[lens]
+
+
+_QUAD_PREFIX, _QUAD_MASK = _quad_tables()
+_QUAD_LEN = np.ascontiguousarray(_QUAD_PREFIX[:, 4])
+# the 4 lane offsets of a quad as 4 bytes of one uint32 (one gather per quad)
+_QUAD_OFF_U8 = _QUAD_PREFIX[:, :4].astype(np.uint8).view("<u4").ravel()
+_QUAD_MASK_T = np.ascontiguousarray(_QUAD_MASK.T)
+# bytes of zero padding past a decode buffer: a quad's lanes past its row's
+# last value read at most 3 lanes x 4 bytes beyond the row's data
+_WORD_PAD = 16
+
+
+def _words_at(buf: np.ndarray) -> np.ndarray:
+    """Aligned uint32 array w with w[i] = the little-endian word starting at
+    byte i of buf (zero past its end).  One strided copy turns the decoder's
+    per-value unaligned 4-byte loads into aligned gathers, which NumPy runs
+    about 3x faster — the analog of the reference decoder's unconditional
+    16-byte load (src/streamvbyte_x64_decode.c:10-26)."""
+    n = buf.size + _WORD_PAD
+    padded = _scratch("dec_bytes", n + 3, np.uint8)
+    padded[:buf.size] = buf
+    padded[buf.size:] = 0
+    words = _scratch("dec_words", n, np.uint32)
+    words[:] = np.ndarray((n,), np.uint32, buffer=padded, strides=(1,))
+    return words
+
+
+def _quad_index(enc: np.ndarray, row_enc: np.ndarray, pkey: np.ndarray,
+                scheme0124: bool | np.ndarray):
+    """Per-quad table index (256 * scheme0124 + control byte) of the first
+    pkey[r] control bytes of each row, read in place at row_enc[r]; with
+    the quad starts qs (len R+1).  scheme0124: one bool or per-row bools."""
+    qs = np.zeros(pkey.size + 1, dtype=np.int64)
+    np.cumsum(pkey, out=qs[1:])
+    K = int(qs[-1])
+    lut = enc[_cached_arange(K, np.intp)
+              + np.repeat(row_enc - qs[:-1], pkey)].astype(np.intp)
+    if np.ndim(scheme0124):
+        lut += np.repeat(256 * scheme0124.astype(np.intp), pkey)
+    elif scheme0124:
+        lut += 256
+    return lut, qs
+
+
+def _quad_data_len(lut, qs, n):
+    """(exclusive cumsum of quad data lengths, per-row data bytes of the
+    first n[r] values): whole quads plus the used lanes of the last one."""
+    cq = np.zeros(lut.size + 1, dtype=np.intp)
+    np.cumsum(_QUAD_LEN[lut], out=cq[1:])
+    last = qs[1:] - 1
+    pkey = qs[1:] - qs[:-1]
+    return cq, (cq[last] - cq[qs[:-1]]
+                + _QUAD_PREFIX[lut[last], n - 4 * (pkey - 1)])
+
+
 def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
-                     scheme0124: bool, n_values: np.ndarray | None = None):
+                     scheme0124: bool | np.ndarray,
+                     n_values: np.ndarray | None = None,
+                     skip: np.ndarray | None = None,
+                     delta: bool | np.ndarray = False):
     """Decode every row's independent svb stream; returns (flat, offsets).
+
+    ``scheme0124`` and ``delta`` are each one bool for the whole batch or a
+    per-row bool array: svb, svb0124 and svb_delta rows decode in the SAME
+    pass, and the per-row prefix sum runs on the delta rows only.  Rows
+    marked in ``skip`` (other codecs of a mixed batch) are left unwritten —
+    their slots in flat are uninitialised until the caller's own kernels
+    fill them.  Rows are read in place from ``enc``: no per-codec subset
+    copy.
+
+    The pass runs over quads (one control byte = 4 lanes), laid out
+    lane-major: per-quad table lookups give every lane's byte offset and
+    mask, one exclusive cumsum over quads places each quad's data, then
+    each lane is one aligned 4-byte gather (_words_at), one mask and one
+    scatter to its final slot — a few data-independent whole-batch passes.
+    Delta rows' quads are ordered last, so their prefix sum runs over one
+    contiguous range of quads, rebased per row.
 
     n_values (optional, <= n_toks) decodes only each row's FIRST n_values[r]
     tokens — the format-aware prefix decode: svb data bytes are laid out in
@@ -225,69 +315,73 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     needs only the first ceil(n/4) control bytes plus the prefix's own data
     bytes; trailing values are never touched (truncate-to-max-seq-len
     without full decode)."""
-    full = n_toks.astype(np.int64)
-    nr = full if n_values is None else np.minimum(n_values.astype(np.int64), full)
-    R = nr.size
-    offsets = np.concatenate([[0], np.cumsum(nr)])
+    full = np.asarray(n_toks, dtype=np.int64)
+    nr = full if n_values is None else np.minimum(
+        np.asarray(n_values, dtype=np.int64), full)
+    offsets = np.zeros(nr.size + 1, dtype=np.int64)
+    np.cumsum(nr, out=offsets[1:])
     V = int(offsets[-1])
-    flat = np.zeros(V, dtype=np.uint32)
-    if V == 0:
-        return flat, offsets
-    key_len = (full + 3) // 4  # control REGION size (addresses the data base)
-    # control bytes GATHERED: only the prefix's own ceil(nr/4) per row — in
-    # prefix mode the tail's control bytes are never read, keeping work
-    # O(prefix); also bounds 4*sum(pkey) <= 4V, so the int32 index guard
-    # below stays valid even when the full control region would not fit
-    pkey = key_len if n_values is None else (nr + 3) // 4
-    K = int(pkey.sum())
-    ctrl_starts = np.concatenate([[0], np.cumsum(pkey)])
-    ctrl_intra = np.arange(K, dtype=np.int64) - np.repeat(ctrl_starts[:-1], pkey)
-    ctrl = enc[np.repeat(enc_offsets[:-1], pkey) + ctrl_intra]
-    codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
-    idt = np.int32 if enc.size + 4 < 2**31 and V * 4 < 2**31 else np.int64
-    # per-value index into codes_padded, built in one scratch buffer:
-    # arange(V) - repeat(row_start) + repeat(4*ctrl_start) with the two
-    # repeats fused into one (their operand is combined per row first)
-    intra = _scratch("dec_intra", V, idt)
-    row_shift = (4 * ctrl_starts[:-1] - offsets[:-1]).astype(idt)
-    np.add(_cached_arange(V, idt), np.repeat(row_shift, nr), out=intra)
-    codes = codes_padded[intra]
-    lens = _LEN_0124_U8[codes] if scheme0124 else codes + np.uint8(1)
-    # data-byte offsets fit idt by construction (enc.size < 2^31 there), so
-    # the cumsum runs at half the memory traffic of int64
-    ends = np.cumsum(lens, dtype=idt)
-    row_data_base = _row_base_at(ends, offsets[:-1])
-    src = _scratch("dec_src", V, idt)
-    np.subtract(ends, lens, out=src, casting="unsafe")
-    # ONE unconditional little-endian 4-byte load per value (a stride-1
-    # uint32 view over a padded buffer) + per-length mask LUT: the NumPy
-    # analog of the reference's unconditional 16B SIMD load + shuffle-mask
-    # (src/streamvbyte_x64_decode.c:10-26); pad 4 because a 0124 zero
-    # (len 0) at stream end has src == buffer end.  ~2x the 4-byte-gather
-    # + shift approach this replaces.
-    if n_values is None:
-        src -= np.repeat((row_data_base - enc_offsets[:-1] - key_len).astype(idt), nr)
-        enc_p = _scratch("dec_encp", enc.size + 4, np.uint8)
-        enc_p[:enc.size] = enc
-        enc_p[enc.size:] = 0
+    out = np.empty(V + 3, dtype=np.uint32)  # +3: the last row's spill
+    live = nr > 0 if skip is None else (nr > 0) & ~skip
+    if np.ndim(delta):
+        rows = np.concatenate([np.flatnonzero(live & ~delta),
+                               np.flatnonzero(live & delta)])
+        n_delta = rows.size - int(np.count_nonzero(live & ~delta))
     else:
-        # prefix mode: copying the ENTIRE encoded buffer into the padded
-        # scratch would cost O(full stream bytes) per batch; gather only
-        # each row's PREFIX data segment (key_len addresses the data base;
-        # pdata = the prefix's own byte span) so memory traffic stays
-        # O(prefix) end-to-end
-        pdata = _seg_sum(lens, offsets)
-        cd_off = np.concatenate([[0], np.cumsum(pdata)])
-        total = int(cd_off[-1])
-        enc_p = _scratch("dec_encp", total + 4, np.uint8)
-        _gather_segments(enc_p[:total], enc, enc_offsets[:-1] + key_len,
-                         pdata, cd_off)
-        enc_p[total:total + 4] = 0
-        src -= np.repeat((row_data_base - cd_off[:-1]).astype(idt), nr)
-    u32 = np.ndarray((enc_p.size - 3,), np.uint32, buffer=enc_p, strides=(1,))
-    vals = u32[src]  # fancy-index gather beats np.take's bounds-check path
-    vals &= _MASK_BY_LEN[lens]
-    return vals, offsets
+        rows = np.flatnonzero(live)
+        n_delta = rows.size if delta else 0
+    if not rows.size:
+        return out[:V], offsets
+    r_nr = nr[rows]
+    pkey = (r_nr + 3) // 4  # quads decoded per row (a prefix's own only)
+    row_enc = enc_offsets[:-1][rows]
+    lut, qs = _quad_index(enc, row_enc, pkey, scheme0124[rows]
+                          if np.ndim(scheme0124) else scheme0124)
+    K = lut.size
+    qstart, pdata = _quad_data_len(lut, qs, r_nr)
+    # the data region starts after the FULL control region
+    data_start = row_enc + (full[rows] + 3) // 4
+    if n_values is None:
+        words = _words_at(enc)
+    else:
+        # prefix mode: copying the ENTIRE encoded buffer would cost O(full
+        # stream bytes) per batch; gather only each row's PREFIX data bytes
+        # so memory traffic stays O(prefix) end-to-end
+        cd_off = np.zeros(rows.size + 1, dtype=np.int64)
+        np.cumsum(pdata, out=cd_off[1:])
+        gathered = _scratch("dec_prefix", int(cd_off[-1]), np.uint8)
+        _gather_segments(gathered, enc, data_start, pdata, cd_off)
+        words = _words_at(gathered)
+        data_start = cd_off[:-1]
+    qstart = qstart[:-1] + np.repeat(data_start - qstart[qs[:-1]], pkey)
+    # lanes are laid out lane-major, (4, K): every step below is a long
+    # inner loop over quads, never a 4-wide one
+    lanes = _scratch("dec_lanes", 4 * K, np.intp).reshape(4, K)
+    np.add(qstart, _QUAD_OFF_U8[lut].view(np.uint8).reshape(K, 4).T, out=lanes)
+    vals = words[lanes.ravel()].reshape(4, K)
+    for j in range(4):
+        vals[j] &= _QUAD_MASK_T[j][lut]
+    if n_delta:
+        # row-major prefix sum in the lane-major layout: inclusive sum
+        # down each quad's 4 lanes, plus the exclusive sum of the quad
+        # totals before it in its row
+        first = rows.size - n_delta
+        d = vals[:, qs[first]:]
+        for j in (1, 2, 3):
+            d[j] += d[j - 1]
+        before = np.zeros(d.shape[1] + 1, dtype=np.uint32)
+        np.cumsum(d[3], out=before[1:])
+        dq = qs[first:] - qs[first]
+        d += before[:-1] - np.repeat(before[dq[:-1]], pkey[first:])
+    # lane j of quad q lands at qdest[q] + j.  Lanes past a row's last
+    # value spill into the slots that follow; writing lane 3 first and lane
+    # 0 last lets the owner of every spilled slot (its lane index is always
+    # lower) overwrite it, and the last row's spill lands past V
+    qdest = 4 * _cached_arange(K, np.intp) + np.repeat(
+        offsets[:-1][rows] - 4 * qs[:-1], pkey)
+    for j in (3, 2, 1, 0):
+        out[j:][qdest] = vals[j]
+    return out[:V], offsets
 
 
 # -------------------------------------------------------------- per-row costs
@@ -611,12 +705,10 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     classifies hit vs literal; segmented exclusive scans index each pair
     into its row's code / literal stream; table lookups are flat gathers."""
     n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
     offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
     live = np.flatnonzero(n_toks > 0)
     if live.size == 0:
-        return flat, offsets
+        return np.zeros(0, dtype=np.uint32), offsets
     starts = enc_offsets[:-1][live]
     k = enc[starts].astype(np.int64)
     nr = n_toks[live]
@@ -648,9 +740,8 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     # rows hold an even pair count (m = 2n), so the global low/high
     # interleave reconstructs each value from its own row's pairs
     vals = pairs16[0::2] | (pairs16[1::2] << np.uint32(16))
-    _place_segments_u32(flat, vals, np.concatenate([[0], np.cumsum(nr)]),
-                        offsets[:-1][live])
-    return flat, offsets
+    # live rows' values are contiguous and in row order: vals IS the output
+    return vals, offsets
 
 
 def _rle_costs(flat: np.ndarray, offsets: np.ndarray,
@@ -819,66 +910,22 @@ def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
     return out, out_offsets, codec_ids
 
 
+_SVB_FAMILY = np.array([CODEC_ID[n] for n in ("svb", "svb0124", "svb_delta")],
+                       dtype=np.int32)
+
+
 def decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
                 codec_ids: np.ndarray):
-    """Decode each row; returns (flat uint32[], offsets int64[R+1])."""
-    enc = np.ascontiguousarray(enc, dtype=np.uint8)
-    enc_offsets = np.asarray(enc_offsets, dtype=np.int64)
-    n_toks = np.asarray(n_toks, dtype=np.int64)
-    codec_ids = np.asarray(codec_ids, dtype=np.int32)
-    R = n_toks.size
-    unique_cids = np.unique(codec_ids)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] in ("svb", "svb0124", "svb_delta"):
-        name = CODEC_NAMES[unique_cids[0]]
-        vals, offsets = _svb_decode_rows(enc, enc_offsets, n_toks, name == "svb0124")
-        if name == "svb_delta":
-            vals = _segmented_cumsum_u32(vals, offsets)
-        return vals, offsets
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "rle":
-        return _rle_decode_rows(enc, enc_offsets, n_toks)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] in ("bitpack", "for"):
-        return _bitpack_decode_rows(enc, enc_offsets, n_toks,
-                                    CODEC_NAMES[unique_cids[0]] == "for")
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "dict":
-        return _dict_decode_rows(enc, enc_offsets, n_toks)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "fsst":
-        return _fsst_decode_rows(enc, enc_offsets, n_toks)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "ef":
-        return ef_decode_rows(enc, enc_offsets, n_toks)
-    offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    for cid in unique_cids:
-        rows = np.flatnonzero(codec_ids == cid)
-        name = CODEC_NAMES[cid]
-        if rows.size == R:
-            sub_enc, sub_eoff = enc, enc_offsets
-        else:
-            sub_enc, sub_eoff = _subset_bytes(enc, enc_offsets, rows)
-        sub_n = n_toks[rows]
-        if name in ("svb", "svb0124", "svb_delta"):
-            vals, voff = _svb_decode_rows(sub_enc, sub_eoff, sub_n, name == "svb0124")
-            if name == "svb_delta":
-                vals = _segmented_cumsum_u32(vals, voff)
-        elif name == "rle":
-            vals, voff = _rle_decode_rows(sub_enc, sub_eoff, sub_n)
-        elif name in ("bitpack", "for"):
-            vals, voff = _bitpack_decode_rows(sub_enc, sub_eoff, sub_n, name == "for")
-        elif name == "dict":
-            vals, voff = _dict_decode_rows(sub_enc, sub_eoff, sub_n)
-        elif name == "fsst":
-            vals, voff = _fsst_decode_rows(sub_enc, sub_eoff, sub_n)
-        elif name == "ef":
-            vals, voff = ef_decode_rows(sub_enc, sub_eoff, sub_n)
-        else:
-            fn = select.REGISTRY[name].decode
-            parts = [fn(sub_enc[sub_eoff[i]:sub_eoff[i + 1]].tobytes(), int(sub_n[i]))
-                     for i in range(rows.size)]
-            vals = np.concatenate(parts) if parts else np.zeros(0, np.uint32)
-            voff = np.concatenate([[0], np.cumsum(sub_n)])
-        # vectorized scatter of this group's values into the global flat array
-        intra = np.arange(int(voff[-1]), dtype=np.int64) - np.repeat(voff[:-1], sub_n)
-        flat[np.repeat(offsets[:-1][rows], sub_n) + intra] = vals
-    return flat, offsets
+    """Decode each row; returns (flat uint32[], offsets int64[R+1]).
+
+    One-pass svb-family contract: every svb, svb0124 and svb_delta row of a
+    batch, mixed or not, decodes in ONE _svb_decode_rows pass that reads
+    the rows in place from ``enc`` (no per-codec subset copy), picks each
+    row's length table by its codec and writes every value straight to its
+    final slot; the per-row prefix sum then runs over the svb_delta rows
+    only.  Each other codec decodes its rows through one ``_DECODERS``
+    kernel call and is scattered into place."""
+    return _decode_rows(enc, enc_offsets, n_toks, codec_ids, None)
 
 
 def decode_prefix_rows(enc: np.ndarray, enc_offsets: np.ndarray,
@@ -888,43 +935,44 @@ def decode_prefix_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     truncate-to-max-seq-len operator of a training pipeline, done without
     decoding the tail.
 
-    svb-family rows (svb / svb0124 / svb_delta) use the true prefix path:
-    control bytes address the prefix's data bytes directly, so work and
-    output are O(prefix), not O(n_tok) (svb_delta's prefix sum is
-    prefix-local: value i depends only on values <= i).  Codecs whose layout
-    is not prefix-addressable without the header (dict tables, RLE runs,
-    bit-packed words) decode fully and truncate — correct, just not cheaper.
-    Returns (flat uint32[], offsets int64[R+1]) with per-row length
-    min(max_len, n_tok)."""
+    svb-family rows (svb / svb0124 / svb_delta) use the true prefix path
+    of decode_rows' one pass: control bytes address the prefix's data bytes
+    directly, so work and output are O(prefix), not O(n_tok) (svb_delta's
+    prefix sum is prefix-local: value i depends only on values <= i).
+    Codecs whose layout is not prefix-addressable without the header (dict
+    tables, RLE runs, bit-packed words) decode fully and truncate — correct,
+    just not cheaper.  Returns (flat uint32[], offsets int64[R+1]) with
+    per-row length min(max_len, n_tok)."""
+    n_toks = np.asarray(n_toks, dtype=np.int64)
+    return _decode_rows(enc, enc_offsets, n_toks, codec_ids,
+                        np.minimum(n_toks, max_len))
+
+
+def _decode_rows(enc, enc_offsets, n_toks, codec_ids, n_values):
+    """decode_rows (n_values None) and decode_prefix_rows share this."""
     enc = np.ascontiguousarray(enc, dtype=np.uint8)
     enc_offsets = np.asarray(enc_offsets, dtype=np.int64)
     n_toks = np.asarray(n_toks, dtype=np.int64)
     codec_ids = np.asarray(codec_ids, dtype=np.int32)
-    kk = np.minimum(n_toks, max_len)
-    R = n_toks.size
-    offsets = np.concatenate([[0], np.cumsum(kk)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    unique_cids = np.unique(codec_ids)
-    for cid in unique_cids:
+    if codec_ids.size and (codec_ids.min() < 0
+                           or codec_ids.max() >= len(CODEC_NAMES)):
+        bad = codec_ids[(codec_ids < 0) | (codec_ids >= len(CODEC_NAMES))]
+        raise ValueError(f"unknown codec id {int(bad[0])}")
+    other = ~np.isin(codec_ids, _SVB_FAMILY)
+    flat, offsets = _svb_decode_rows(
+        enc, enc_offsets, n_toks, codec_ids == CODEC_ID["svb0124"], n_values,
+        skip=other, delta=codec_ids == CODEC_ID["svb_delta"])
+    for cid in np.unique(codec_ids[other]):
         rows = np.flatnonzero(codec_ids == cid)
-        name = CODEC_NAMES[cid]
-        if rows.size == R:
-            sub_enc, sub_eoff = enc, enc_offsets
-        else:
-            sub_enc, sub_eoff = _subset_bytes(enc, enc_offsets, rows)
-        if name in ("svb", "svb0124", "svb_delta"):
-            vals, voff = _svb_decode_rows(sub_enc, sub_eoff, n_toks[rows],
-                                          name == "svb0124",
-                                          n_values=kk[rows])
-            if name == "svb_delta":
-                vals = _segmented_cumsum_u32(vals, voff)
-        else:
-            fvals, fvoff = decode_rows(sub_enc, sub_eoff, n_toks[rows],
-                                       np.full(rows.size, cid, np.int32))
-            vals, voff = subset_prefix(fvals, fvoff, kk[rows])
-        sub_k = kk[rows]
-        intra = np.arange(int(voff[-1]), dtype=np.int64) - np.repeat(voff[:-1], sub_k)
-        flat[np.repeat(offsets[:-1][rows], sub_k) + intra] = vals
+        whole = rows.size == n_toks.size
+        sub_enc, sub_eoff = ((enc, enc_offsets) if whole
+                             else _subset_bytes(enc, enc_offsets, rows))
+        vals, voff = _DECODERS[CODEC_NAMES[cid]](sub_enc, sub_eoff, n_toks[rows])
+        if n_values is not None:
+            vals, voff = subset_prefix(vals, voff, n_values[rows])
+        if whole:
+            return vals, voff
+        flat[_row_positions(offsets, rows)[0]] = vals
     return flat, offsets
 
 
@@ -946,22 +994,25 @@ def _segmented_cumsum_u32(d: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     return g
 
 
-def _subset_rows(flat, offsets, rows):
+def _row_positions(offsets: np.ndarray, rows: np.ndarray):
+    """Flat positions of the given rows' elements, in row order, and the
+    subset's own offsets."""
     nr = offsets[1:] - offsets[:-1]
     sub_nr = nr[rows]
-    sub_off = np.concatenate([[0], np.cumsum(sub_nr)])
-    idx = np.repeat(offsets[:-1][rows], sub_nr) + (
-        np.arange(int(sub_off[-1]), dtype=np.int64) - np.repeat(sub_off[:-1], sub_nr))
+    sub_off = np.zeros(rows.size + 1, dtype=np.int64)
+    np.cumsum(sub_nr, out=sub_off[1:])
+    idx = (_cached_arange(int(sub_off[-1]), np.intp)
+           + np.repeat(offsets[:-1][rows] - sub_off[:-1], sub_nr))
+    return idx, sub_off
+
+
+def _subset_rows(flat, offsets, rows):
+    idx, sub_off = _row_positions(offsets, rows)
     return flat[idx], sub_off
 
 
 def _subset_bytes(enc, enc_offsets, rows):
-    sz = enc_offsets[1:] - enc_offsets[:-1]
-    sub_sz = sz[rows]
-    sub_off = np.concatenate([[0], np.cumsum(sub_sz)])
-    idx = np.repeat(enc_offsets[:-1][rows], sub_sz) + (
-        np.arange(int(sub_off[-1]), dtype=np.int64) - np.repeat(sub_off[:-1], sub_sz))
-    return enc[idx], sub_off
+    return _subset_rows(enc, enc_offsets, rows)
 
 
 # ------------------------------------------------------------ batched validate
@@ -981,22 +1032,108 @@ def max_compressed_bytes_rows(n_toks: np.ndarray) -> np.ndarray:
 # normalized to [0, p)).  Both must stay in sync with the SQL text.
 _FP_P = 1_000_000_007
 _FP_B = 31
+# block of positions sharing one weight table: value j of a block weighs
+# 31^(-j) mod p, so the per-value weights are ONE broadcast table
+_FP_BLOCK = 1 << 13
+_FP_2_32 = (1 << 32) % _FP_P
 
-_fp_pow = np.ones(1, dtype=np.uint64)  # 31^k mod p, grown on demand
+
+def _fp_power_table(base: int, n: int, table: np.ndarray | None = None
+                    ) -> np.ndarray:
+    """base^k mod p for k < n (at least), grown from ``table`` by vectorized
+    doubling: t[m:2m] = t[:m] * base^m mod p.  Entries are < p < 2^30, so
+    every product stays < 2^60 in uint64."""
+    t = np.ones(1, np.uint64) if table is None else table
+    while t.size < n:
+        step = np.uint64(pow(base, t.size, _FP_P))
+        t = np.concatenate([t, t * step % np.uint64(_FP_P)])
+    return t
 
 
-def _fp_powers(n: int) -> np.ndarray:
-    """Power table 31^k mod p for k < n (process-lifetime cache, grows to the
-    longest row ever seen — the Python extension loop runs once per size)."""
-    global _fp_pow
-    if _fp_pow.size < n:
-        size = max(n, 2 * _fp_pow.size)
-        ext = np.empty(size, np.uint64)
-        ext[:_fp_pow.size] = _fp_pow
-        for i in range(_fp_pow.size, size):
-            ext[i] = ext[i - 1] * _FP_B % _FP_P
-        _fp_pow = ext
-    return _fp_pow
+# 31^(-j) and 31^j for j < _FP_BLOCK; 31^(i*_FP_BLOCK), grown on demand
+_FP_INV_W = _fp_power_table(pow(_FP_B, -1, _FP_P), _FP_BLOCK)[:_FP_BLOCK]
+_FP_POW_LO = _fp_power_table(_FP_B, _FP_BLOCK)[:_FP_BLOCK]
+_fp_pow_hi = np.ones(1, np.uint64)
+
+
+def _fp_pow(k: np.ndarray) -> np.ndarray:
+    """31^k mod p for an int64 array k >= 0 (k = hi*_FP_BLOCK + lo)."""
+    global _fp_pow_hi
+    hi = k // _FP_BLOCK
+    need = int(hi.max()) + 1 if hi.size else 1
+    if _fp_pow_hi.size < need:
+        _fp_pow_hi = _fp_power_table(pow(_FP_B, _FP_BLOCK, _FP_P), need,
+                                     _fp_pow_hi)
+    return _FP_POW_LO[k % _FP_BLOCK] * _fp_pow_hi[hi] % np.uint64(_FP_P)
+
+
+def _fp_widen(u: np.ndarray) -> np.ndarray:
+    """uint32 values -> uint64 copy in a zero-padded whole-block scratch
+    (the block reshape of _fp_fold needs the padding)."""
+    nb = -(-u.size // _FP_BLOCK)
+    x = _scratch("fp_x", nb * _FP_BLOCK, np.uint64)
+    x[:u.size] = u
+    x[u.size:] = 0
+    return x
+
+
+def _fp_fold(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Per-row fold of the UNSIGNED values widened into x (by _fp_widen;
+    consumed in place): fp_r = sum_g x_g * 31^(e_r - 1 - g) mod p, with e_r
+    the row's end; offsets start at 0.
+
+    31^(e-1-g) = 31^(e-1-bB) * 31^-(g-bB) for the block b holding g (block
+    size B): the per-value factor depends on the position inside the block
+    only, so per-value work is one broadcast multiply by the block weight
+    table, and everything that depends on the row — its end, the block —
+    moves to one factor per (row, block) segment.  Products stay < 2^62
+    and a segment holds <= B values, so its sum is exact as a wrapped
+    uint64 sum plus the sum of the products' high words.  No per-value
+    division, no per-value exponent array."""
+    V = int(offsets[-1])
+    R = offsets.size - 1
+    fp = np.zeros(R, dtype=np.int64)
+    if V == 0:
+        return fp
+    x.reshape(-1, _FP_BLOCK)[...] *= _FP_INV_W
+    x = x[:V]
+    live = np.flatnonzero(offsets[1:] > offsets[:-1])
+    row_starts = offsets[:-1][live]
+    starts = np.union1d(row_starts, np.arange(0, V, _FP_BLOCK))
+    seg_row = live[np.searchsorted(row_starts, starts, side="right") - 1]
+    total = np.add.reduceat(x, starts)
+    x >>= np.uint64(32)
+    high = np.add.reduceat(x, starts)
+    low = total - (high << np.uint64(32))
+    part = (high % np.uint64(_FP_P) * np.uint64(_FP_2_32) + low) % np.uint64(_FP_P)
+    part = part * _fp_pow(offsets[seg_row + 1] - 1
+                          - starts // _FP_BLOCK * _FP_BLOCK) % np.uint64(_FP_P)
+    first = np.flatnonzero(np.diff(seg_row, prepend=-1))
+    fp[live] = (np.add.reduceat(part, first) % np.uint64(_FP_P)).astype(np.int64)
+    return fp
+
+
+def _fp_unsigned(flat: np.ndarray) -> tuple[np.ndarray, bool]:
+    """(uint32 values congruent to the tokens mod 2^32, any negative?) —
+    int64 inputs outside int32 are reduced mod p first (still congruent
+    mod p, and never negative)."""
+    flat = np.asarray(flat)
+    if flat.dtype.itemsize == 4:
+        u = flat.view(np.uint32)
+        return u, flat.dtype.kind == "i" and bool(u.size) and int(u.max()) >= 1 << 31
+    if flat.size and (int(flat.min()) < -(1 << 31) or int(flat.max()) >= 1 << 31):
+        return np.remainder(flat.astype(np.int64), _FP_P).astype(np.uint32), False
+    return _fp_unsigned(flat.astype(np.int32))
+
+
+def _fp_signed(fp_u, u, offsets, negative):
+    """Fold of the SIGNED values from the fold of their uint32 views: a
+    negative t is u - 2^32, so subtract 2^32 times the fold of the
+    negative-value indicator (only when the batch has a negative value)."""
+    if not negative:
+        return fp_u
+    fp_neg = _fp_fold(_fp_widen(u >> np.uint32(31)), offsets)
+    return (fp_u + (_FP_P - _FP_2_32) * fp_neg) % _FP_P
 
 
 def fingerprint_rows(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
@@ -1006,32 +1143,35 @@ def fingerprint_rows(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     tokens.  ``flat`` carries the SIGNED token values (int32 view for
     decoded streams — zigzag rows are negative); empty rows fold to 0.
 
-    Closed form per row: fp = (sum_j norm(t_j) * 31^(L-1-j)) mod p with
-    norm(t) = t mod p in [0, p) — equal to the left fold because mod is a
-    ring homomorphism.  All products stay < 2^60 (two factors < 2^30) and
-    the one global cumsum stays < 2^61 for any int32-offset Arrow batch, so
-    uint64 arithmetic is exact end-to-end.  Replaces the interpreted
-    CodegenFallback ``aggregate()`` pass (~10x/element; CLAUDE.md) that
-    previously taxed every round-trip query."""
+    Closed form per row: fp = (sum_j t_j * 31^(L-1-j)) mod p — equal to
+    the left fold because mod is a ring homomorphism — evaluated by
+    _fp_fold over the uint32 views, with the sign handled per row
+    (_fp_signed).  Replaces the interpreted CodegenFallback ``aggregate()``
+    pass (~10x/element; CLAUDE.md) that previously taxed every round-trip
+    query."""
     offsets = np.asarray(offsets, dtype=np.int64)
-    nr = offsets[1:] - offsets[:-1]
-    V = int(offsets[-1]) if offsets.size else 0
-    if V == 0:
-        return np.zeros(nr.size, dtype=np.int64)
-    v = np.remainder(np.asarray(flat[:V]).astype(np.int64),
-                     _FP_P).astype(np.uint64)
-    pw = _fp_powers(int(nr.max()))
-    # position-from-end exponent: element at global index g of row i gets
-    # 31^(end_i - 1 - g)
-    rev = np.repeat(offsets[1:], nr)
-    rev -= 1 + np.arange(V, dtype=np.int64)
-    v *= pw[rev]
-    v %= np.uint64(_FP_P)
-    c = np.empty(V + 1, dtype=np.uint64)
-    c[0] = 0
-    np.cumsum(v, out=c[1:])
-    return ((c[offsets[1:]] - c[offsets[:-1]]) %
-            np.uint64(_FP_P)).astype(np.int64)
+    if not offsets.size:
+        return np.zeros(0, dtype=np.int64)
+    base = int(offsets[0])
+    offsets = offsets - base
+    u, negative = _fp_unsigned(np.asarray(flat)[base:base + int(offsets[-1])])
+    return _fp_signed(_fp_fold(_fp_widen(u), offsets), u, offsets, negative)
+
+
+def checksum_fingerprint_rows(flat: np.ndarray, offsets: np.ndarray
+                              ) -> tuple[np.ndarray, np.ndarray]:
+    """(per-row checksum, per-row fingerprint) of uint32 decoded values
+    sharing ONE widening pass: the checksum (encode_table's per-row sum of
+    the uint32 token values, mod 2^64 as int64) is summed from the widened
+    values before _fp_fold multiplies them in place.  The fingerprint reads
+    the values as signed int32, like fingerprint_rows(flat.view(int32)).
+    offsets start at 0, as decode_rows returns them."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    u, negative = _fp_unsigned(
+        np.asarray(flat).view(np.int32)[:int(offsets[-1])])
+    x = _fp_widen(u)
+    checksum = _seg_sum(x[:u.size].view(np.int64), offsets)
+    return checksum, _fp_signed(_fp_fold(x, offsets), u, offsets, negative)
 
 
 def truncate_rows(enc: np.ndarray, enc_offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -1052,7 +1192,8 @@ def validate_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
                   scheme0124: bool = False) -> np.ndarray:
     """Per-row streamvbyte_validate_stream (src/streamvbyte_decode.c:89-136):
     row is valid iff its control bytes' length sum matches its data length.
-    Returns bool[R]. Vectorized across all rows of the batch."""
+    Returns bool[R]. Vectorized across all rows of the batch, with the
+    rows' control bytes read in place through the decoder's quad tables."""
     enc = np.ascontiguousarray(enc, dtype=np.uint8)
     enc_offsets = np.asarray(enc_offsets, dtype=np.int64)
     n_toks = np.asarray(n_toks, dtype=np.int64)
@@ -1064,21 +1205,10 @@ def validate_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
     valid[empty] = (sizes[empty] == n_toks[empty])
     check = np.flatnonzero(~empty & (sizes >= key_len))
     if check.size:
-        sub_enc, sub_eoff = _subset_bytes(enc, enc_offsets, check)
-        sub_n = n_toks[check]
-        sub_key = key_len[check]
-        K = int(sub_key.sum())
-        ctrl_starts = np.concatenate([[0], np.cumsum(sub_key)])
-        ctrl_intra = np.arange(K, dtype=np.int64) - np.repeat(ctrl_starts[:-1], sub_key)
-        ctrl = sub_enc[np.repeat(sub_eoff[:-1], sub_key) + ctrl_intra]
-        codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
-        V = int(sub_n.sum())
-        sub_off = np.concatenate([[0], np.cumsum(sub_n)])
-        intra = np.arange(V, dtype=np.int64) - np.repeat(sub_off[:-1], sub_n)
-        codes = codes_padded[np.repeat(4 * ctrl_starts[:-1], sub_n) + intra]
-        lens = _LEN_0124[codes] if scheme0124 else codes.astype(np.int64) + 1
-        expected = sub_key + _seg_sum(lens, sub_off)
-        valid[check] = expected == sizes[check]
+        lut, qs = _quad_index(enc, enc_offsets[:-1][check], key_len[check],
+                              scheme0124)
+        data = _quad_data_len(lut, qs, n_toks[check])[1]
+        valid[check] = key_len[check] + data == sizes[check]
     return valid
 
 
@@ -1135,11 +1265,10 @@ def decode_delta_rows_prev(enc: np.ndarray, enc_offsets: np.ndarray,
     n_values (optional) decodes only each row's first min(n_values, n_tok)
     tokens — valid for delta streams because value i depends only on deltas
     <= i, so a prefix of the stream reconstructs a prefix of the tokens."""
-    vals, offsets = _svb_decode_rows(np.ascontiguousarray(enc, dtype=np.uint8),
-                                     np.asarray(enc_offsets, dtype=np.int64),
-                                     np.asarray(n_toks, dtype=np.int64), False,
-                                     n_values=n_values)
-    out = _segmented_cumsum_u32(vals, offsets)
+    out, offsets = _svb_decode_rows(np.ascontiguousarray(enc, dtype=np.uint8),
+                                    np.asarray(enc_offsets, dtype=np.int64),
+                                    np.asarray(n_toks, dtype=np.int64), False,
+                                    n_values=n_values, delta=True)
     nr = offsets[1:] - offsets[:-1]
     out += np.repeat(np.asarray(prev).astype(np.int64).astype(np.uint32), nr)
     return out, offsets
@@ -1200,16 +1329,13 @@ def _rle_encode_rows(flat: np.ndarray, offsets: np.ndarray):
 def _rle_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray):
     """Inverse of _rle_encode_rows, whole-batch."""
     n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
     offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
     live = np.flatnonzero(n_toks > 0)
     if live.size == 0:
-        return flat, offsets
+        return np.zeros(0, dtype=np.uint32), offsets
     starts = enc_offsets[:-1][live]
     nruns = enc[(starts[:, None] + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
     len_sv = enc[(starts[:, None] + 4 + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
-    run_offsets = np.concatenate([[0], np.cumsum(nruns)])
     # gather the two concatenated sub-streams
     sv_off = np.concatenate([[0], np.cumsum(len_sv)])
     sv_cat = np.empty(int(sv_off[-1]), dtype=np.uint8)
@@ -1222,11 +1348,11 @@ def _rle_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     run_vals, _ = _svb_decode_rows(sv_cat, sv_off, nruns, False)
     run_lens, _ = _svb_decode_rows(sl_cat, sl_off, nruns, False)
     expanded = np.repeat(run_vals, run_lens.astype(np.int64))
-    # expanded is concatenated in live-row order == flat's live region order
-    exp_sizes = _seg_sum(run_lens.astype(np.int64), run_offsets)
-    exp_off = np.concatenate([[0], np.cumsum(exp_sizes)])
-    _place_segments_u32(flat, expanded, exp_off, offsets[:-1][live])
-    return flat, offsets
+    # expanded is concatenated in live-row order == the output's order
+    if expanded.size != offsets[-1]:
+        raise ValueError(f"rle runs expand to {expanded.size} values, "
+                         f"n_tok sums to {int(offsets[-1])}")
+    return expanded, offsets
 
 
 def _gather_segments(dst, src, src_starts, sizes, dst_offsets):
@@ -1235,15 +1361,6 @@ def _gather_segments(dst, src, src_starts, sizes, dst_offsets):
         return
     intra = np.arange(total, dtype=np.int64) - np.repeat(dst_offsets[:-1], sizes)
     dst[:] = src[np.repeat(src_starts, sizes) + intra]
-
-
-def _place_segments_u32(out, seg, seg_offsets, dest_starts):
-    sizes = seg_offsets[1:] - seg_offsets[:-1]
-    total = int(seg_offsets[-1])
-    if total == 0:
-        return
-    intra = np.arange(total, dtype=np.int64) - np.repeat(seg_offsets[:-1], sizes)
-    out[np.repeat(dest_starts, sizes) + intra] = seg[:total]
 
 
 # ----------------------------------------- batched bit-pack / FOR / dictionary
@@ -1503,12 +1620,10 @@ def _bitpack_encode_rows(flat, offsets, frame_of_ref: bool):
 
 def _bitpack_decode_rows(enc, enc_offsets, n_toks, frame_of_ref: bool):
     n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
     offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
     live = np.flatnonzero(n_toks > 0)
     if live.size == 0:
-        return flat, offsets
+        return np.zeros(0, dtype=np.uint32), offsets
     starts = enc_offsets[:-1][live]
     widths = enc[starts].astype(np.int64)
     hdr = 5 if frame_of_ref else 1
@@ -1521,9 +1636,7 @@ def _bitpack_decode_rows(enc, enc_offsets, n_toks, frame_of_ref: bool):
     if frame_of_ref:
         base = enc[(starts[:, None] + 1 + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel()
         codes = codes + np.repeat(base, nr)
-    exp_off = np.concatenate([[0], np.cumsum(nr)])
-    _place_segments_u32(flat, codes, exp_off, offsets[:-1][live])
-    return flat, offsets
+    return codes, offsets
 
 
 def _ef_validate_rows(flat, offsets):
@@ -1592,12 +1705,10 @@ def ef_encode_rows(flat, offsets):
 
 def ef_decode_rows(enc, enc_offsets, n_toks):
     n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
     offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
     live = np.flatnonzero(n_toks > 0)
     if live.size == 0:
-        return flat, offsets
+        return np.zeros(0, dtype=np.uint32), offsets
     starts = enc_offsets[:-1][live]
     L = enc[starts].astype(np.int64)
     nr = n_toks[live]
@@ -1619,8 +1730,7 @@ def ef_decode_rows(enc, enc_offsets, n_toks):
     high = (ones - np.repeat(ub_off[:-1] * 8, nr) - intra).astype(np.uint64)
     vals = ((high << np.repeat(L, nr).astype(np.uint64)) | low) \
         .astype(np.uint32)
-    _place_segments_u32(flat, vals, sub_off, offsets[:-1][live])
-    return flat, offsets
+    return vals, offsets
 
 
 def _dict_encode_rows(flat, offsets):
@@ -1659,12 +1769,10 @@ def _dict_encode_rows(flat, offsets):
 
 def _dict_decode_rows(enc, enc_offsets, n_toks):
     n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
     offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
     live = np.flatnonzero(n_toks > 0)
     if live.size == 0:
-        return flat, offsets
+        return np.zeros(0, dtype=np.uint32), offsets
     starts = enc_offsets[:-1][live]
     k = enc[(starts[:, None] + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
     uniq_off = np.concatenate([[0], np.cumsum(k)])
@@ -1679,6 +1787,17 @@ def _dict_decode_rows(enc, enc_offsets, n_toks):
     _gather_segments(packed, enc, starts + 4 + 4 * k, cb, pb_off)
     codes = _unpack_bits_rows(packed, pb_off, nr, widths)
     vals = uniq_vals[np.repeat(uniq_off[:-1], nr) + codes]
-    exp_off = np.concatenate([[0], np.cumsum(nr)])
-    _place_segments_u32(flat, vals, exp_off, offsets[:-1][live])
-    return flat, offsets
+    return vals, offsets
+
+
+# name -> whole-batch decode kernel (enc, enc_offsets, n_toks) -> (flat,
+# offsets) for every codec outside the svb family (decode_rows runs those
+# in its one pass)
+_DECODERS = {
+    "bitpack": partial(_bitpack_decode_rows, frame_of_ref=False),
+    "for": partial(_bitpack_decode_rows, frame_of_ref=True),
+    "dict": _dict_decode_rows,
+    "rle": _rle_decode_rows,
+    "fsst": _fsst_decode_rows,
+    "ef": ef_decode_rows,
+}

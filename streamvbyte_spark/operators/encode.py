@@ -23,6 +23,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +36,8 @@ ENCODED_SCHEMA = (
 )
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 DECODED_FP_SCHEMA = "doc_id string, n_tok int, source string, fingerprint bigint"
+# codec id -> name, the value set of the stored `codec` column
+_CODEC_NAMES = pa.array(batched.CODEC_NAMES, pa.string())
 
 
 def _list_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -81,6 +84,20 @@ def _text_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         raise ValueError("text column contains NULLs; filter or coalesce "
                          "to '' before the fused tokenizer")
     return _flat_binary(col.cast(pa.binary()))
+
+
+def _codec_ids(batch: pa.RecordBatch) -> np.ndarray:
+    """The batch's `codec` names -> int32 codec ids in ONE vectorized
+    lookup.  An unknown or NULL name raises ValueError naming the codec and
+    the row's doc_id."""
+    names = batch.column(batch.schema.get_field_index("codec"))
+    ids = pc.index_in(names, value_set=_CODEC_NAMES)
+    if ids.null_count:
+        row = pc.index(pc.is_null(ids), True).as_py()
+        doc = batch.column(batch.schema.get_field_index("doc_id"))[row]
+        raise ValueError(f"unknown codec {names[row].as_py()!r} decoding "
+                         f"doc_id={doc}")
+    return np.asarray(ids, dtype=np.int32)
 
 
 def _i32_offsets(offsets: np.ndarray) -> np.ndarray:
@@ -165,7 +182,7 @@ def encode_table(df: DataFrame, codec: str = "auto",
             tmin = batched._seg_reduce(np.minimum, flat, offsets).astype(np.int64)
             tmax = batched._seg_reduce(np.maximum, flat, offsets).astype(np.int64)
             empty = nr == 0
-            names = pa.array([batched.CODEC_NAMES[c] for c in cids], pa.string())
+            names = _CODEC_NAMES.take(pa.array(cids, pa.int32()))
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(batch.schema.get_field_index("doc_id")),
@@ -252,21 +269,25 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             cols = {n: batch.schema.get_field_index(n) for n in
-                    ("doc_id", "source", "n_tok", "codec", "encoded", "checksum")}
+                    ("doc_id", "source", "n_tok", "encoded", "checksum")}
             enc, eoff = _flat_binary(batch.column(cols["encoded"]))
             n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
-            names = batch.column(cols["codec"]).to_pylist()
-            cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
-            flat, offsets = batched.decode_rows(enc, eoff, n_toks, cids)
+            flat, offsets = batched.decode_rows(enc, eoff, n_toks,
+                                                _codec_ids(batch))
             if verify_checksum:
                 want = np.asarray(batch.column(cols["checksum"]), dtype=np.int64)
-                got = batched._seg_sum(flat.astype(np.int64), offsets)
+                if fingerprint:
+                    # one widening of the values feeds both folds
+                    got, fp = batched.checksum_fingerprint_rows(flat, offsets)
+                else:
+                    got = batched._seg_sum(flat.astype(np.int64), offsets)
                 bad = np.flatnonzero(want != got)
                 if bad.size:
                     doc = batch.column(cols["doc_id"])[int(bad[0])]
                     raise ValueError(f"checksum mismatch decoding doc_id={doc}")
-            if fingerprint:
+            elif fingerprint:
                 fp = batched.fingerprint_rows(flat.view(np.int32), offsets)
+            if fingerprint:
                 yield pa.RecordBatch.from_arrays(
                     [batch.column(cols["doc_id"]),
                      pa.array(n_toks.astype(np.int32), pa.int32()),
@@ -306,13 +327,11 @@ def decode_table_prefix(enc_df: DataFrame, max_len: int,
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             cols = {n: batch.schema.get_field_index(n) for n in
-                    ("doc_id", "source", "n_tok", "codec", "encoded")}
+                    ("doc_id", "source", "n_tok", "encoded")}
             enc, eoff = _flat_binary(batch.column(cols["encoded"]))
             n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
-            names = batch.column(cols["codec"]).to_pylist()
-            cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
             flat, offsets = batched.decode_prefix_rows(
-                enc, eoff, n_toks, cids, max_len)
+                enc, eoff, n_toks, _codec_ids(batch), max_len)
             nr = (offsets[1:] - offsets[:-1]).astype(np.int32)
             if fingerprint:
                 fp = batched.fingerprint_rows(flat.view(np.int32), offsets)

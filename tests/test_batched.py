@@ -184,6 +184,68 @@ def test_prefix_decode_mixed_codec_batch():
         np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a[:17])
 
 
+def _encode_each(arrays, names):
+    """Each row encoded on its own by the single-array REGISTRY codec ->
+    (row buffers, flat bytes, byte offsets, n_toks, codec ids)."""
+    bufs = [select.REGISTRY[n].encode(a) for a, n in zip(arrays, names)]
+    enc = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    eoff = np.concatenate([[0], np.cumsum([len(b) for b in bufs])]).astype(np.int64)
+    n_toks = np.array([a.size for a in arrays], dtype=np.int64)
+    cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
+    return bufs, enc, eoff, n_toks, cids
+
+
+def test_round_robin_codecs_decode_row_by_row():
+    """Codec ids assigned round-robin over all 9 codecs (CODEC_NAMES order,
+    so every svb0124 row sits between an svb and an svb_delta row), rows
+    cycling through EDGE_LENGTHS incl. empty ones, ef rows sorted: every
+    row of decode_rows and decode_prefix_rows must equal the single-array
+    REGISTRY decode of that row — a per-row scheme or delta mask applied
+    to the wrong rows shows up as a wrong row."""
+    lengths = EDGE_LENGTHS * 4 + [1000, 0]
+    names = [batched.CODEC_NAMES[i % len(batched.CODEC_NAMES)]
+             for i in range(len(lengths))]
+    arrays = [np.sort(gen_mixed(n)) if name == "ef" else gen_mixed(n)
+              for n, name in zip(lengths, names)]
+    bufs, enc, eoff, n_toks, cids = _encode_each(arrays, names)
+    want = [select.REGISTRY[n].decode(b, a.size)
+            for a, b, n in zip(arrays, bufs, names)]
+    vals, voff = batched.decode_rows(enc, eoff, n_toks, cids)
+    for i, w in enumerate(want):
+        np.testing.assert_array_equal(w, arrays[i])
+        np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], w,
+                                      f"row {i} {names[i]}")
+    for k in (0, 1, 3, 4, 5, 33):
+        vals, voff = batched.decode_prefix_rows(enc, eoff, n_toks, cids, k)
+        for i, w in enumerate(want):
+            np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], w[:k],
+                                          f"row {i} {names[i]} k={k}")
+
+
+def test_svb_family_mixed_batch_reads_rows_in_place(monkeypatch):
+    """The one-pass contract: svb, svb0124 and svb_delta rows of a mixed
+    batch decode straight from the encoded buffer — never through a
+    per-codec subset copy of their bytes."""
+    def no_subset(*args):
+        raise AssertionError("svb-family rows must be read in place")
+
+    monkeypatch.setattr(batched, "_subset_bytes", no_subset)
+    names = ["svb", "svb0124", "svb_delta"] * len(EDGE_LENGTHS)
+    arrays = [gen_mixed(n) for n in EDGE_LENGTHS * 3]
+    _, enc, eoff, n_toks, cids = _encode_each(arrays, names)
+    vals, voff = batched.decode_rows(enc, eoff, n_toks, cids)
+    pvals, pvoff = batched.decode_prefix_rows(enc, eoff, n_toks, cids, 6)
+    for i, a in enumerate(arrays):
+        np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a)
+        np.testing.assert_array_equal(pvals[pvoff[i]:pvoff[i + 1]], a[:6])
+
+
+def test_decode_rows_rejects_unknown_codec_id():
+    with pytest.raises(ValueError, match="unknown codec id 9"):
+        batched.decode_rows(np.zeros(0, np.uint8), np.zeros(2, np.int64),
+                            np.zeros(1, np.int64), np.array([9], np.int32))
+
+
 def test_all_empty_batch():
     flat = np.zeros(0, np.uint32)
     offsets = np.zeros(4, np.int64)
@@ -312,15 +374,31 @@ def _fp_fold(vals):
 
 def test_fingerprint_rows_matches_sql_fold():
     rng = np.random.default_rng(7)
+    p = 1_000_000_007
     rows = [rng.integers(-2 ** 31, 2 ** 31, size=n).astype(np.int32)
             for n in [0, 1, 2, 5, 63, 64, 65, 1000, 0, 37, 4097]]
+    # int32 extremes and multiples of p (fold to 0) in one row
+    rows.append(np.array([-2 ** 31, 2 ** 31 - 1, p, 2 * p, -p, -2 * p, 0, -1,
+                          p - 1, 1 - p, -2 ** 31, 2 ** 31 - 1], np.int32))
+    # a row crossing two weight-block boundaries, then an empty last row
+    rows.append(rng.integers(-2 ** 31, 2 ** 31, size=2 * batched._FP_BLOCK + 3)
+                .astype(np.int32))
+    rows.append(np.zeros(0, np.int32))
     flat = np.concatenate(rows)
     off = np.concatenate([[0], np.cumsum([r.size for r in rows])]).astype(np.int64)
     got = batched.fingerprint_rows(flat, off)
     want = np.array([_fp_fold(r) for r in rows], dtype=np.int64)
     np.testing.assert_array_equal(got, want)
     # in-range invariant (the SQL fold normalizes to [0, p))
-    assert (got >= 0).all() and (got < 1_000_000_007).all()
+    assert (got >= 0).all() and (got < p).all()
+    # the decode path's shared widening: same fold, plus the uint32 sums
+    csum, fp = batched.checksum_fingerprint_rows(flat.view(np.uint32), off)
+    np.testing.assert_array_equal(fp, want)
+    np.testing.assert_array_equal(
+        csum, [int(r.view(np.uint32).astype(np.int64).sum()) for r in rows])
+    # a wider dtype and values past int32 reduce exactly too
+    wide = np.array([2 ** 40 + 3, -(2 ** 35), 7], np.int64)
+    assert batched.fingerprint_rows(wide, np.array([0, 3]))[0] == _fp_fold(wide)
 
 
 def test_fingerprint_rows_unsigned_view_equals_signed():
@@ -333,14 +411,19 @@ def test_fingerprint_rows_unsigned_view_equals_signed():
     assert got[0] == _fp_fold([-1, -2 ** 31, 1, 2 ** 31 - 1])
 
 
-def test_fingerprint_rows_empty_and_growth():
-    # empty batch, empty rows, then a row longer than any before (power
-    # table growth path)
+def test_fingerprint_rows_empty_and_growth(monkeypatch):
+    # empty batch, empty rows, then positions past the cached power table
+    # (reset to its first entry), so the table has to grow by doubling
     assert batched.fingerprint_rows(
         np.zeros(0, np.int32), np.array([0, 0, 0], np.int64)).tolist() == [0, 0]
+    monkeypatch.setattr(batched, "_fp_pow_hi", np.ones(1, np.uint64))
     long = np.arange(200_000, dtype=np.int32)
     got = batched.fingerprint_rows(long, np.array([0, long.size], np.int64))
     assert got[0] == _fp_fold(long)
+    assert batched._fp_pow_hi.size >= long.size // batched._FP_BLOCK
+    t = batched._fp_power_table(31, 1000)
+    assert [int(t[k]) for k in (0, 1, 2, 511, 512, 999)] == \
+        [pow(31, k, 1_000_000_007) for k in (0, 1, 2, 511, 512, 999)]
 
 
 def test_row_costs_prune_matches_exact_selection():

@@ -43,6 +43,30 @@ def test_roundtrip_all_codecs(spark, tok):
         assert verify_roundtrip(tok, dec) == 0, codec
 
 
+def test_decode_rejects_unknown_codec_name(spark):
+    """An unknown or NULL stored codec name fails with a ValueError naming
+    the codec and the doc_id, not a bare KeyError."""
+    import pyarrow as pa
+
+    from streamvbyte_spark.operators.encode import _codec_ids
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["d0", "d1", "d2"]), pa.array(["svb", "svbx", None])],
+        names=["doc_id", "codec"])
+    with pytest.raises(ValueError, match="unknown codec 'svbx' decoding doc_id=d1"):
+        _codec_ids(batch)
+    with pytest.raises(ValueError, match="unknown codec None decoding doc_id=d2"):
+        _codec_ids(batch.slice(2))
+    assert _codec_ids(batch.slice(0, 1)).tolist() == [0]
+    df = spark.createDataFrame(
+        [("a", "s", [1, 2, 3]), ("b", "s", [4, 5])],
+        "doc_id string, source string, tokens array<int>")
+    enc = encode_table(df, codec="svb").withColumn(
+        "codec", F.when(F.col("doc_id") == "b", F.lit("svbx"))
+        .otherwise(F.col("codec")))
+    with pytest.raises(Exception, match="unknown codec 'svbx' decoding doc_id=b"):
+        decode_table(enc).collect()
+
+
 def test_size_never_exceeds_reference(spark, tok):
     """north rule: compressed size <= reference streamvbyte_encode output."""
     enc = encode_table(tok, codec="auto")

@@ -26,6 +26,16 @@ VECTOR_COST_CODECS_FULL adds fsst to the argmin (the auto_full_* queries),
 and ``codec='auto_sorted'`` adds Elias-Fano on rows that are
 non-decreasing (row_sorted_mask gate; the auto_sorted_* queries — r7).
 
+Encode is cost pass -> layout -> one pass: the selected cost of each row
+is its exact encoded size, so encode_rows lays out every row's slot before
+writing a byte, and ONE _svb_encode_rows pass writes every svb, svb0124
+and svb_delta row straight into its slot (each row with its own scheme,
+deltas on the svb_delta rows only, byte lengths reused from the cost
+pass).  Every other codec encodes through its ``_ENCODERS`` kernel into its
+slots, checked against the costs.  The cost pass bounds the dict column
+from both sides of the priority order, so its composite-key sort runs only
+on rows where dict can still win.
+
 Decode is one pass for the svb family: decode_rows decodes every svb,
 svb0124 and svb_delta row of a batch, mixed or not, in ONE _svb_decode_rows
 pass that reads each row in place from the encoded buffer (no per-codec
@@ -44,7 +54,7 @@ from functools import partial
 
 import numpy as np
 
-from . import companions, core, select
+from . import companions, core
 
 _LEN_0124 = np.array([0, 1, 2, 4], dtype=np.int64)
 # value mask by data-byte length 0..4
@@ -65,10 +75,6 @@ CODEC_NAMES = ("svb", "svb0124", "svb_delta", "bitpack", "for", "dict",
                "rle", "fsst", "ef")
 CODEC_ID = {n: i for i, n in enumerate(CODEC_NAMES)}
 VECTOR_COST_CODECS = ("svb", "svb0124", "svb_delta", "bitpack", "for", "dict", "rle")
-# every codec has a whole-batch encode kernel (fsst joined in round 4 via
-# _fsst_encode_rows/_fsst_decode_rows — no per-row Python remains on any
-# encode path)
-_WHOLE_BATCH_CODECS = frozenset(CODEC_NAMES)
 # full candidate set including fsst (cost via _fsst_costs, encode via
 # _fsst_encode_rows); the default "auto" keeps the 7-codec contract so the
 # driver-facing auto_size/auto_roundtrip formats stay stable, and fsst is
@@ -101,6 +107,15 @@ def _cached_arange(n: int, dtype) -> np.ndarray:
     return a[:n]
 
 
+def _cached_ones(n: int) -> np.ndarray:
+    """Read-only uint8 ones of length n (grown on demand)."""
+    a = _ARANGES.get("ones")
+    if a is None or a.size < n:
+        a = np.ones(max(int(n * 5 // 4) + 16, 1024), dtype=np.uint8)
+        _ARANGES["ones"] = a
+    return a[:n]
+
+
 def _seg_sum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """Per-row sums of x (len V) for rows bounded by offsets (len R+1).
 
@@ -113,7 +128,11 @@ def _seg_sum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     nonempty = offsets[1:] > starts
     if not x.size or not nonempty.any():
         return np.zeros(n, dtype=np.int64)
-    seg = np.add.reduceat(x[:offsets[-1]], starts[nonempty], dtype=np.int64)
+    # byte-wide inputs (lengths, flags) accumulate in int32 while no sum
+    # can overflow it: ~2x faster than an int64 accumulator
+    acc = np.int32 if x.itemsize == 1 and offsets[-1] < 1 << 23 else np.int64
+    seg = np.add.reduceat(x[:offsets[-1]], starts[nonempty],
+                          dtype=acc).astype(np.int64, copy=False)
     if nonempty.all():
         return seg
     out = np.zeros(n, dtype=np.int64)
@@ -151,8 +170,26 @@ def _row_deltas(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 
 # ----------------------------------------------------------- batched svb enc
 
-def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
+# control-byte mask of a row's last quad by its used lanes (n % 4; 0 = 4)
+_PARTIAL_QUAD_MASK = np.array([0xFF, 0x03, 0x0F, 0x3F], dtype=np.uint8)
+
+
+def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray,
+                     scheme0124: bool | np.ndarray = False,
+                     lens: np.ndarray | None = None,
+                     out: np.ndarray | None = None,
+                     out_offsets: np.ndarray | None = None,
+                     skip: np.ndarray | None = None):
     """Encode every row as an independent svb stream; returns (out, out_offsets).
+
+    Standalone, the pass sizes its own output from the values' byte
+    lengths.  As encode_rows' one svb-family pass it gets the layout
+    instead: ``out`` (with 4 spare bytes past out_offsets[-1]) and
+    ``out_offsets`` come from the cost pass, ``lens`` are the per-value
+    data lengths that pass already computed, ``scheme0124`` is one bool
+    per row, and rows marked in ``skip`` (other codecs, encoded into their
+    slots afterwards) get no control bytes and data length 0 (``lens`` must
+    be 0 on their values).
 
     Data bytes are written with one ordered 4-byte-per-value overwrite scatter
     (NumPy fancy assignment: on duplicate indices the last value wins, so a
@@ -160,40 +197,40 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
     mirroring how the reference SSE kernel writes 16B and advances dataPtr by
     the true length, src/streamvbyte_x64_encode.c:70-81).  Control bytes are
     scattered AFTER data so row-leading control regions clobber any surplus
-    from the previous row's final value.
+    from the previous row's final value.  A skipped row's values all store
+    at its slot start: whatever they and a neighbour's surplus leave there
+    is overwritten when the caller writes the slot.
     """
     V = flat.size
-    nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
+    nr = offsets[1:] - offsets[:-1]
     key_len = (nr + 3) // 4
-    if scheme0124:
-        lens = core._lens_0124(flat)
-        codes = np.where(lens == 4, 3, lens).astype(np.uint8)
-    else:
-        lens = core._lens_1234(flat)
-        codes = (lens - 1).astype(np.uint8)
-    data_len = _seg_sum(lens, offsets)
-    out_size = np.where(nr > 0, key_len + data_len, 0)
-    out_offsets = np.concatenate([[0], np.cumsum(out_size)])
+    if skip is not None:
+        key_len[skip] = 0
+    if lens is None:
+        lens = core._lens_0124(flat) if scheme0124 else core._lens_1234(flat)
+    if out is None:
+        out_offsets = np.zeros(nr.size + 1, dtype=np.int64)
+        np.cumsum(np.where(nr > 0, key_len + _seg_sum(lens, offsets), 0),
+                  out=out_offsets[1:])
+        # np.empty, not zeros: every byte in [0, total_out) is written —
+        # each row is key_len ctrl bytes (ctrl scatter) + data bytes (each
+        # value's 4-byte store covers its own length; zero-len 0124 values
+        # share the next writer's dest) — so the memset would be pure
+        # overhead.  +4 pad: the final value's surplus lands past total_out.
+        out = np.empty(int(out_offsets[-1]) + 4, dtype=np.uint8)
     total_out = int(out_offsets[-1])
     if V == 0:
-        return np.zeros(total_out, dtype=np.uint8), out_offsets
-
-    # np.empty, not zeros: every byte in [0, total_out) is written — each
-    # row is key_len ctrl bytes (ctrl scatter) + data bytes (each value's
-    # 4-byte store covers its own length; zero-len 0124 values share the
-    # next writer's dest) — so the memset would be pure overhead.  +4 pad:
-    # surplus of the final value lands past total_out and is sliced off.
-    out = np.empty(total_out + 4, dtype=np.uint8)
-    # index math in int32 (half the memory traffic) unless the batch is huge
-    idt = np.int32 if total_out + 4 < 2**31 and V * 4 < 2**31 else np.int64
-    ends = np.cumsum(lens, dtype=idt)  # <= 4V, fits idt by construction
+        return out[:total_out], out_offsets
+    # the prefix sum in int32 (twice as fast as int64) unless the batch is
+    # huge; the scatter index in intp (NumPy converts any other index
+    # dtype first, which costs more than the wider arithmetic)
+    ends = np.cumsum(lens, dtype=np.int32 if V * 4 < 2**31 else np.int64)
     # data bytes: per-value destination = global byte start minus the row's
     # data base plus the row's (out offset + control length)
-    dest = _scratch("enc_dest", V, idt)
+    dest = _scratch("enc_dest", V, np.intp)
     np.subtract(ends, lens, out=dest, casting="unsafe")
-    row_adj = (_row_base_at(ends, offsets[:-1])
-               - out_offsets[:-1] - key_len).astype(idt)
-    dest -= np.repeat(row_adj, nr)
+    dest -= np.repeat(_row_base_at(ends, offsets[:-1])
+                      - out_offsets[:-1] - key_len, nr)
     # ONE unconditional little-endian 4-byte store per value through a
     # stride-1 uint32 view (fancy assignment iterates in index order, so a
     # later value's store overwrites the previous value's surplus bytes —
@@ -201,20 +238,37 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
     # ~3.7x the 4-lane byte scatter this replaces
     u32 = np.ndarray((out.size - 3,), np.uint32, buffer=out, strides=(1,))
     u32[dest] = flat  # ordered overwrite scatter
-    # control bytes: per-row zero-padded code quads, packed LSB-first
-    intra = _scratch("enc_intra", V, idt)
-    np.subtract(_cached_arange(V, idt), np.repeat(offsets[:-1].astype(idt), nr),
-                out=intra)
-    pad_starts = np.concatenate([[0], np.cumsum(4 * key_len)])
-    padded = _scratch("enc_padded", int(pad_starts[-1]), np.uint8)
-    padded[:] = 0
-    padded[np.repeat(pad_starts[:-1].astype(idt), nr) + intra] = codes
-    q = padded.reshape(-1, 4)
-    ctrl = (q[:, 0] | (q[:, 1] << 2) | (q[:, 2] << 4) | (q[:, 3] << 6))
-    K = ctrl.size
-    ctrl_starts = np.concatenate([[0], np.cumsum(key_len)])
-    ctrl_intra = np.arange(K, dtype=np.int64) - np.repeat(ctrl_starts[:-1], key_len)
-    out[np.repeat(out_offsets[:-1], key_len) + ctrl_intra] = ctrl
+    # 2-bit codes: len - 1 (scheme 1234); 0, 1, 2, 3 for len 0, 1, 2, 4
+    # (scheme 0124) — len - 1 plus one unless the length is 4.  Three zero
+    # codes past the end let every position start a 4-code window.
+    codes = _scratch("enc_codes", V + 3, np.uint8)
+    np.subtract(lens, np.uint8(1), out=codes[:V])
+    codes[V:] = 0
+    if np.ndim(scheme0124):
+        if scheme0124.any():
+            codes[:V] += (np.repeat(scheme0124, nr).view(np.uint8)
+                          > (lens >> np.uint8(2)))
+    elif scheme0124:
+        codes[:V] += lens < 4
+    # control bytes: win[v] packs the codes of values v..v+3 LSB-first, so
+    # a quad starting at value v has control byte win[v], once the lanes
+    # past its row's last value are masked off (they hold the next row's
+    # codes, or a skipped row's meaningless ones)
+    win = _scratch("enc_win", V, np.uint8)
+    tmp = _scratch("enc_win_tmp", V, np.uint8)
+    np.copyto(win, codes[:V])
+    for k in (1, 2, 3):
+        np.left_shift(codes[k:V + k], np.uint8(2 * k), out=tmp)
+        win |= tmp
+    qs = np.zeros(nr.size + 1, dtype=np.int64)
+    np.cumsum(key_len, out=qs[1:])
+    K = int(qs[-1])
+    ctrl = win[4 * _cached_arange(K, np.intp)
+               + np.repeat(offsets[:-1] - 4 * qs[:-1], key_len)]
+    part = np.flatnonzero((key_len > 0) & (nr & 3 > 0))
+    ctrl[qs[part + 1] - 1] &= _PARTIAL_QUAD_MASK[nr[part] & 3]
+    out[_cached_arange(K, np.intp)
+        + np.repeat(out_offsets[:-1] - qs[:-1], key_len)] = ctrl
     return out[:total_out], out_offsets
 
 
@@ -391,23 +445,32 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
     """(R, len(candidates)) exact per-row encoded sizes. Empty rows cost 0.
 
     prune=True relaxes the dict column ONLY: rows where a cheap PROVEN
-    lower bound on the dict cost already meets the running minimum of the
-    candidates BEFORE dict in priority order carry that bound instead of
-    the exact cost (skipping the composite-key sort, ~65% of the full cost
-    pass on the bench mix).  Argmin/min consumers are unaffected by
-    construction: the bound is <= the exact cost, so a row whose exact
-    dict cost could win is never pruned; and a pruned value >= the prior
-    minimum can neither change the matrix minimum nor steal a first-
-    minimum tie from an earlier candidate (a tie at the prior minimum
-    resolves to the earlier column with or without pruning, and a later
-    candidate below the prior minimum is below the bound too).  Cell-exact
-    consumers (per-codec size queries, the parity tests) use the default
-    prune=False."""
+    lower bound lb on the dict cost already meets the minimum of the
+    candidates BEFORE dict in priority order (lb >= min(earlier)) or
+    exceeds the minimum of those AFTER it (lb > min(later)) carry that
+    bound instead of the exact cost (skipping the composite-key sort).
+    Argmin/min consumers are unaffected by construction: the bound is <=
+    the exact cost, so a row whose exact dict cost could win is never
+    pruned.  A pruned value >= min(earlier) can neither change the matrix
+    minimum nor steal a first-minimum tie from an earlier candidate (a tie
+    resolves to the earlier column with or without pruning); a pruned
+    value > min(later) is above the matrix minimum with or without pruning,
+    and a tie with a later candidate is never pruned, so dict keeps that
+    win.  Cell-exact consumers (per-codec size queries, the parity tests)
+    use the default prune=False."""
+    return _row_costs(flat, offsets, candidates, prune)[0]
+
+
+def _row_costs(flat: np.ndarray, offsets: np.ndarray,
+               candidates: tuple[str, ...], prune: bool):
+    """row_costs plus what encode_rows' svb-family pass reuses: the per-value
+    data lengths by codec name ("svb", and "svb0124" / "svb_delta" when
+    they are candidates) and the per-row deltas (None unless svb_delta is a
+    candidate).  Every column except dict is computed first, so dict's
+    bound sees the candidates on both sides of it."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
-    R = nr.size
     key_len = (nr + 3) // 4
-    cols = []
-    prior_min = None
+    cols = {}
     # shared single-pass classifications (b1/b2 feed both svb schemes;
     # max/min feed both bitpack and for)
     if flat.size:
@@ -418,15 +481,19 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
                     ) if any(n == "svb0124" for n in candidates) else None
     else:
         lens1234 = lens0124 = np.zeros(0, np.uint8)
+    lens = {"svb": lens1234}
+    d = None
     mx = mn = None
     for name in candidates:
         if name == "svb":
             c = key_len + _seg_sum(lens1234, offsets)
         elif name == "svb0124":
+            lens[name] = lens0124
             c = key_len + _seg_sum(lens0124, offsets)
         elif name == "svb_delta":
             d = _row_deltas(flat, offsets)
-            c = key_len + _seg_sum(core._lens_1234(d), offsets)
+            lens[name] = core._lens_1234(d)
+            c = key_len + _seg_sum(lens[name], offsets)
         elif name == "bitpack":
             mx = _seg_reduce(np.maximum, flat, offsets).astype(np.int64) if mx is None else mx
             w = _exact_width(mx)
@@ -437,8 +504,7 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
             w = _exact_width(mx - mn)
             c = 5 + (nr * w + 7) // 8
         elif name == "dict":
-            c = _dict_costs(flat, offsets, nr,
-                            prior_min if prune else None)
+            continue  # last: its bound needs both neighbours
         elif name == "rle":
             c = _rle_costs(flat, offsets, lens1234)
         elif name == "fsst":
@@ -448,55 +514,81 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
             c = _ef_cost_rows(flat, offsets)
         else:
             raise ValueError(f"no vectorized cost for codec {name!r}")
-        col = np.where(nr > 0, c, 0)
-        cols.append(col)
-        if prune:
-            prior_min = col if prior_min is None \
-                else np.minimum(prior_min, col)
-    return np.stack(cols, axis=1)
+        cols[name] = np.where(nr > 0, c, 0)
+    if "dict" in candidates:
+        j = candidates.index("dict")
+        # min of the columns before dict and of those after it (or None)
+        bounds = [np.minimum.reduce([cols[n] for n in side])
+                  if prune and side else None
+                  for side in (candidates[:j], candidates[j + 1:])]
+        cols["dict"] = np.where(nr > 0, _dict_costs(flat, offsets, nr,
+                                                    *bounds), 0)
+    costs = np.stack([cols[n] for n in candidates], axis=1)
+    return costs, lens, d
+
+
+# dict lower bound: the low-bit projection is as wide as the batch's mean
+# row length, within these powers of two; batches whose presence table
+# (R x width bytes) would pass 2^26 bytes take the exact cost instead
+_DICT_LB_BITS = (8, 10)
+_DICT_LB_CELLS = 1 << 26
 
 
 def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
-                prior_min: np.ndarray | None) -> np.ndarray:
-    """Per-row dict cost: exact everywhere when prior_min is None; with a
-    prior minimum, exact ONLY where dict could still be the argmin winner
-    and a proven lower bound elsewhere (see row_costs' prune contract).
+                earlier: np.ndarray | None = None,
+                later: np.ndarray | None = None) -> np.ndarray:
+    """Per-row dict cost: exact everywhere without bounds; with the minimum
+    of the candidates before dict (``earlier``) and/or after it
+    (``later``), exact ONLY where dict could still be the argmin winner
+    (lb < earlier and lb <= later) and a proven lower bound lb elsewhere
+    (see row_costs' prune contract).
 
-    The bound: distinct full values >= distinct LOW BYTES (any projection
-    only merges values), and the dict formula 4 + 4K + nr*width(K-1)/8 is
-    nondecreasing in K — so evaluating it at the low-byte distinct count
-    bounds the true cost from below.  The presence table is one byte
-    scatter + a 256-wide row sum (no sort); the composite-key sort then
-    runs only over the surviving rows' values (16% of the bench mix)."""
-    if prior_min is None or flat.size == 0 or nr.size > (1 << 18):
-        k = _row_distinct(flat, offsets)
-        w = _exact_width(np.maximum(k - 1, 0))
-        return 4 + 4 * k + (nr * w + 7) // 8
+    The bound: distinct full values >= distinct values of their low b bits
+    (any projection only merges values), and the dict formula
+    4 + 4K + nr*width(K-1)/8 is nondecreasing in K — so evaluating it at
+    the projected distinct count bounds the true cost from below.  The
+    presence table is one byte scatter + a 2^b-wide row sum (no sort), with
+    b adapted to the mean row length: 256 buckets cap the bound of a long
+    row at 256 distinct values, far below its real count; 1024 cost short
+    rows a table mostly empty.  The composite-key sort then runs only over
+    the surviving rows' values."""
     R = nr.size
-    # int32 index arithmetic: R <= 2^18 (guard above), so rid*256 + low
-    # fits int32 — half the temp traffic of the int64 form
-    rid = np.repeat(_cached_arange(R, np.int32), nr)
-    idx = _scratch("dictlb_idx", flat.size, np.int32)
-    np.left_shift(rid, 8, out=idx)
+    bits = int(np.clip(int(flat.size // max(R, 1)).bit_length(),
+                       *_DICT_LB_BITS))
+    if (earlier is None and later is None) or flat.size == 0 \
+            or R << bits > _DICT_LB_CELLS:
+        return _dict_size(_row_distinct(flat, offsets), nr)
+    # presence index rid << bits | low bits, built in intp: NumPy converts
+    # any other index dtype before a scatter, which costs more
+    idx = _scratch("dictlb_idx", flat.size, np.intp)
+    np.left_shift(np.repeat(_cached_arange(R, np.intp), nr), bits, out=idx)
     lo = _scratch("dictlb_lo", flat.size, np.uint32)
-    np.bitwise_and(flat, np.uint32(0xFF), out=lo)
-    idx += lo.view(np.int32)
-    pres = _scratch("dictlb_pres", R << 8, np.uint8)
+    np.bitwise_and(flat, np.uint32((1 << bits) - 1), out=lo)
+    idx |= lo
+    pres = _scratch("dictlb_pres", R << bits, np.uint8)
     pres[:] = 0
-    pres[idx] = 1
-    klb = _seg_sum(pres, _cached_arange(R + 1, np.int64) << 8)
-    wlb = _exact_width(np.maximum(klb - 1, 0))
-    c = 4 + 4 * klb + (nr * wlb + 7) // 8
-    need = np.flatnonzero(c < prior_min)
+    pres[idx] = _cached_ones(flat.size)  # an array scatters faster than 1
+    c = _dict_size(pres.reshape(R, 1 << bits).sum(axis=1, dtype=np.int64), nr)
+    keep = np.ones(R, dtype=bool)
+    if earlier is not None:
+        keep &= c < earlier
+    if later is not None:
+        keep &= c <= later
+    need = np.flatnonzero(keep)
     if need.size:
         if need.size == R:
             sub_flat, sub_off = flat, offsets
         else:
             sub_flat, sub_off = _subset_rows(flat, offsets, need)
-        k = _row_distinct(sub_flat, sub_off)
-        w = _exact_width(np.maximum(k - 1, 0))
-        c[need] = 4 + 4 * k + (nr[need] * w + 7) // 8
+        c[need] = _dict_size(_row_distinct(sub_flat, sub_off), nr[need])
     return c
+
+
+def _dict_size(k: np.ndarray, nr: np.ndarray) -> np.ndarray:
+    """Dict stream size of rows with k distinct values (companions layout:
+    4B k + 4k B uniques + nr codes of width(k - 1) bits); nondecreasing
+    in k."""
+    return 4 + 4 * k + (nr * _exact_width(np.maximum(k - 1, 0)) + 7) // 8
 
 
 def _ef_cost_rows(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
@@ -621,9 +713,7 @@ def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
     pair); a stable lexsort ranks each row's distinct pairs by (count desc,
     pair desc) for the 255-symbol cap — then scatters table bytes, bitmap
     bits, hit codes and escape literals with segmented placements.  No
-    per-row Python: this removes the last per-row encode loop from the
-    auto_full path (fsst-winning rows previously fell back to the
-    select.REGISTRY loop)."""
+    per-row Python."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     R = nr.size
     if flat.size == 0:
@@ -745,7 +835,7 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
 
 
 def _rle_costs(flat: np.ndarray, offsets: np.ndarray,
-               lens1234: np.ndarray | None = None) -> np.ndarray:
+               lens1234: np.ndarray) -> np.ndarray:
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     if flat.size == 0:
         return np.zeros(nr.size, dtype=np.int64)
@@ -754,164 +844,156 @@ def _rle_costs(flat: np.ndarray, offsets: np.ndarray,
     np.not_equal(flat[1:], flat[:-1], out=is_start[1:].view(bool))
     row_starts = offsets[:-1][nr > 0]
     is_start[row_starts] = 1
-    if lens1234 is None:
-        lens1234 = core._lens_1234(flat)
     # run-value byte lengths without gathering run_vals: a run's value is the
     # element AT the run start, so masking lens1234 by is_start sums exactly
     # the per-run value lengths
     sz_val_data = _seg_sum(lens1234 * is_start, offsets)
     runs_per_row = _seg_sum(is_start, offsets)
     rkey = (runs_per_row + 3) // 4
-    run_pos = np.flatnonzero(is_start)
-    # run lengths: distance to next run start (within the global flat; row
-    # boundaries always start runs so lengths never cross rows)
-    run_lens = np.empty(run_pos.size, dtype=np.uint32)
-    if run_pos.size:
-        np.subtract(run_pos[1:], run_pos[:-1], out=run_lens[:-1],
-                    casting="unsafe")
-        run_lens[-1] = flat.size - run_pos[-1]
-    run_offsets = np.concatenate([[0], np.cumsum(runs_per_row)])
     sz_vals = rkey + sz_val_data
-    sz_lens = rkey + _seg_sum(core._lens_1234(run_lens), run_offsets)
+    sz_lens = rkey + _run_len_bytes(is_start, nr, runs_per_row)
     return 8 + sz_vals + sz_lens
 
 
+def _run_len_bytes(is_start: np.ndarray, nr: np.ndarray,
+                   runs_per_row: np.ndarray) -> np.ndarray:
+    """Per-row svb data bytes of the run lengths: one per run, and more
+    only for runs longer than 255.  Such a run leaves at least 31 aligned
+    8-byte words of is_start all zero, so a batch without that stretch
+    (any batch of rows shorter than 256) never locates its runs."""
+    if int(nr.max()) > 255:
+        V = is_start.size
+        zero = is_start[:V - V % 8].view(np.uint64) == 0
+        c = np.zeros(zero.size + 1, dtype=np.int32)
+        np.cumsum(zero, out=c[1:])
+        if (c[31:] - c[:-31] == 31).any():
+            run_pos = np.flatnonzero(is_start)
+            # run lengths: distance to next run start (row boundaries
+            # always start runs so lengths never cross rows)
+            run_lens = np.empty(run_pos.size, dtype=np.uint32)
+            np.subtract(run_pos[1:], run_pos[:-1], out=run_lens[:-1],
+                        casting="unsafe")
+            run_lens[-1] = V - run_pos[-1]
+            run_offsets = np.concatenate([[0], np.cumsum(runs_per_row)])
+            return _seg_sum(core._lens_1234(run_lens), run_offsets)
+    return runs_per_row
+
+
 # ------------------------------------------------------------ public facades
+
+_SVB_FAMILY = np.array([CODEC_ID[n] for n in ("svb", "svb0124", "svb_delta")],
+                       dtype=np.int32)
+# per-value data lengths of each svb-family codec (svb_delta: of the deltas)
+_SVB_LENS = {"svb": core._lens_1234, "svb0124": core._lens_0124,
+             "svb_delta": core._lens_1234}
+
 
 def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
                 candidates: tuple[str, ...] = VECTOR_COST_CODECS):
     """Encode each row with `codec` (or per-row argmin when 'auto').
 
     Returns (out_bytes: uint8[], out_offsets: int64[R+1], codec_ids: int32[R]).
-    """
+
+    Cost pass -> layout -> one pass: the selected costs (``cost ==
+    len(encode)``) give out_offsets before any byte is written; ONE
+    _svb_encode_rows pass writes every svb-family row into its slot, then
+    each other codec's ``_ENCODERS`` kernel fills its slots, and row sizes
+    that differ from the costs raise ValueError naming the codec and row.
+    A fixed codec is the same flow with one group: svb-family lengths size
+    its layout, any other kernel's output is returned as is."""
     flat = np.ascontiguousarray(flat, dtype=np.uint32)
     offsets = np.asarray(offsets, dtype=np.int64)
     R = offsets.size - 1
     nr = offsets[1:] - offsets[:-1]
+    live = nr > 0
     if codec in ("auto", "auto_sorted"):
-        costs = row_costs(flat, offsets, candidates, prune=True)
+        costs, lens, deltas = _row_costs(flat, offsets, candidates, prune=True)
         pick = np.argmin(costs, axis=1)  # first minimum = candidate priority
         names = np.array([CODEC_ID[c] for c in candidates], dtype=np.int32)
         codec_ids = names[pick]
+        sizes = costs[np.arange(R), pick]
         if codec == "auto_sorted":
             # Elias-Fano joins the argmin only on rows where it is defined
             # (non-decreasing) and STRICTLY smaller — a tie keeps the
             # standard candidate priority, and the selected size equals the
             # oracle's least() either way
-            best = costs[np.arange(R), pick]
-            eligible = (row_sorted_mask(flat, offsets)
-                        & (_ef_cost_rows(flat, offsets) < best))
+            ef = _ef_cost_rows(flat, offsets)
+            eligible = row_sorted_mask(flat, offsets) & (ef < sizes)
             codec_ids[eligible] = CODEC_ID["ef"]
-        codec_ids[nr == 0] = CODEC_ID["svb"]
+            sizes[eligible] = ef[eligible]
+        codec_ids[~live] = CODEC_ID["svb"]
     else:
         codec_ids = np.full(R, CODEC_ID[codec], dtype=np.int32)
-
-    unique_cids = np.unique(codec_ids)
-    # fast path: homogeneous batch -> no subset, no reassembly copy
-    if unique_cids.size == 1:
-        name = CODEC_NAMES[unique_cids[0]]
-        if name in ("svb", "svb0124"):
-            out, ooff = _svb_encode_rows(flat, offsets, name == "svb0124")
-            return out, ooff, codec_ids
-        if name == "svb_delta":
-            out, ooff = _svb_encode_rows(_row_deltas(flat, offsets), offsets, False)
-            return out, ooff, codec_ids
-        if name == "rle":
-            out, ooff = _rle_encode_rows(flat, offsets)
-            return out, ooff, codec_ids
-        if name in ("bitpack", "for"):
-            out, ooff = _bitpack_encode_rows(flat, offsets, name == "for")
-            return out, ooff, codec_ids
-        if name == "dict":
-            out, ooff = _dict_encode_rows(flat, offsets)
-            return out, ooff, codec_ids
-        if name == "fsst":
-            out, ooff = _fsst_encode_rows(flat, offsets)
-            return out, ooff, codec_ids
-
-    def _encode_group(name, g_flat, g_offsets, g_rows):
-        if name in ("svb", "svb0124"):
-            return _svb_encode_rows(g_flat, g_offsets, name == "svb0124")
-        if name == "svb_delta":
-            return _svb_encode_rows(_row_deltas(g_flat, g_offsets), g_offsets, False)
-        if name == "rle":
-            return _rle_encode_rows(g_flat, g_offsets)
-        if name in ("bitpack", "for"):
-            return _bitpack_encode_rows(g_flat, g_offsets, name == "for")
-        if name == "dict":
-            return _dict_encode_rows(g_flat, g_offsets)
-        if name == "fsst":
-            return _fsst_encode_rows(g_flat, g_offsets)
-        if name == "ef":
-            return ef_encode_rows(g_flat, g_offsets)
-        fn = select.REGISTRY[name].encode
-        bufs = [fn(g_flat[g_offsets[i]:g_offsets[i + 1]]) for i in range(g_rows)]
-        enc = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-        eoff = np.concatenate([[0], np.cumsum([len(b) for b in bufs], dtype=np.int64)])
-        return enc, eoff
-
-    # group = (rows, enc_buffer, per-row source starts, per-row sizes);
-    # sources need not be contiguous in enc_buffer
-    groups: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
-    sizes = np.zeros(R, dtype=np.int64)
-    for cid in unique_cids:
-        rows = np.flatnonzero(codec_ids == cid)
+        sizes, lens, deltas = None, {}, None
+    svb_rows = np.isin(codec_ids, _SVB_FAMILY) & live
+    if svb_rows.any():
+        vals, vlens = _svb_family_values(flat, offsets, codec_ids, svb_rows,
+                                         lens, deltas)
+        if sizes is None:
+            sizes = np.where(live, (nr + 3) // 4 + _seg_sum(vlens, offsets), 0)
+    out_offsets = None
+    if sizes is not None:
+        out_offsets = np.zeros(R + 1, dtype=np.int64)
+        np.cumsum(sizes, out=out_offsets[1:])
+        # +4: the svb pass's last 4-byte store may spill past the end
+        out = np.empty(int(out_offsets[-1]) + 4, dtype=np.uint8)
+    if svb_rows.any():
+        _svb_encode_rows(vals, offsets, codec_ids == CODEC_ID["svb0124"],
+                         vlens, out, out_offsets, ~svb_rows)
+    for cid in np.unique(codec_ids[live & ~svb_rows]):
         name = CODEC_NAMES[cid]
-        if rows.size == R:
-            enc, eoff = _encode_group(name, flat, offsets, R)
-            starts, sz = eoff[:-1], eoff[1:] - eoff[:-1]
-        elif 2 * rows.size > R and name in _WHOLE_BATCH_CODECS \
-                and name != "ef":
-            # ef is excluded from the dominant-group whole-batch trick: the
-            # NON-selected minority rows may be unsorted, and ef's loud
-            # validation (correctly) rejects the full batch
-            # DOMINANT group: encode the FULL batch with this codec and
-            # reference only the dominant rows' segments — materializing an
-            # almost-complete token subset (_subset_rows' gather index) costs
-            # more than the whole-batch encode itself (measured ~1.1s subset
-            # vs ~0.3s full svb encode on an 8M-token batch); the minority
-            # rows' wasted encode work is bounded by < 50% of the batch
-            enc, eoff = _encode_group(name, flat, offsets, R)
-            starts = eoff[:-1][rows]
-            sz = (eoff[1:] - eoff[:-1])[rows]
-        else:
-            sub_flat, sub_offsets = _subset_rows(flat, offsets, rows)
-            enc, eoff = _encode_group(name, sub_flat, sub_offsets, rows.size)
-            starts, sz = eoff[:-1], eoff[1:] - eoff[:-1]
-        groups.append((rows, enc, starts, sz))
-        sizes[rows] = sz
-
-    out_offsets = np.concatenate([[0], np.cumsum(sizes)])
-    out = np.empty(int(out_offsets[-1]), dtype=np.uint8)
-    for rows, enc, starts, sz in groups:
-        if not rows.size:
-            continue
-        # run fast path: rows that are consecutive in BOTH the output (row
-        # ids adjacent) and the source buffer (starts adjacent) copy as one
-        # slice memcpy — the common shape when one codec dominates a batch.
-        # Falls back to the element gather when runs are fragmented.
-        breaks = np.flatnonzero((np.diff(rows) != 1) |
-                                (starts[1:] != starts[:-1] + sz[:-1])) + 1
-        n_runs = breaks.size + 1
-        if n_runs <= rows.size // 64 + 1:
-            bounds = np.concatenate([[0], breaks, [rows.size]])
-            for k in range(n_runs):
-                a, b = int(bounds[k]), int(bounds[k + 1])
-                src0 = int(starts[a])
-                nbytes = int(starts[b - 1] + sz[b - 1] - src0)
-                dst0 = int(out_offsets[rows[a]])
-                out[dst0:dst0 + nbytes] = enc[src0:src0 + nbytes]
-        else:
-            cum = np.concatenate([[0], np.cumsum(sz)])
-            intra = np.arange(int(cum[-1]), dtype=np.int64) - np.repeat(cum[:-1], sz)
-            src = np.repeat(starts, sz) + intra
-            dst = np.repeat(out_offsets[:-1][rows], sz) + intra
-            out[dst] = enc[src]
-    return out, out_offsets, codec_ids
+        if not (live & (codec_ids != cid)).any():
+            # the group holds every nonempty row, and empty rows encode to
+            # nothing in every kernel: the whole-batch output IS the layout
+            enc, eoff = _ENCODERS[name](flat, offsets)
+            if sizes is not None:
+                _check_slots(name, np.arange(R), np.diff(eoff), sizes)
+            return enc, eoff, codec_ids
+        rows = np.flatnonzero(codec_ids == cid)
+        enc, eoff = _ENCODERS[name](*_subset_rows(flat, offsets, rows))
+        _check_slots(name, rows, np.diff(eoff), sizes[rows])
+        _place_segments(out, enc, eoff, out_offsets[:-1][rows])
+    if out_offsets is None:  # a fixed codec over an all-empty batch
+        return np.zeros(0, np.uint8), np.zeros(R + 1, dtype=np.int64), codec_ids
+    return out[:int(out_offsets[-1])], out_offsets, codec_ids
 
 
-_SVB_FAMILY = np.array([CODEC_ID[n] for n in ("svb", "svb0124", "svb_delta")],
-                       dtype=np.int32)
+def _svb_family_values(flat, offsets, codec_ids, svb_rows, lens, deltas):
+    """(values, per-value data lengths) for the one svb-family pass:
+    deltas replace the values on svb_delta rows only, each svb-family row
+    takes its codec's lengths (computed here unless ``lens`` already holds
+    them from the cost pass), and every other row's values get length 0."""
+    nr = offsets[1:] - offsets[:-1]
+    masks = {n: svb_rows & (codec_ids == CODEC_ID[n]) for n in _SVB_LENS}
+    masks = {n: m for n, m in masks.items() if m.any()}
+    if "svb_delta" in masks and deltas is None:
+        deltas = _row_deltas(flat, offsets)
+    src = {n: deltas if n == "svb_delta" else flat for n in masks}
+    lens = {n: lens[n] if n in lens else _SVB_LENS[n](src[n]) for n in masks}
+    if len(masks) == 1 and np.array_equal(svb_rows, nr > 0):
+        (n,) = masks
+        return src[n], lens[n]
+    vlens = _scratch("enc_vlens", flat.size, np.uint8)
+    vlens[:] = 0
+    for n, m in masks.items():
+        np.copyto(vlens, lens[n], where=np.repeat(m, nr))
+    if "svb_delta" not in masks:
+        return flat, vlens
+    vals = _scratch("enc_vals", flat.size, np.uint32)
+    np.copyto(vals, flat)
+    np.copyto(vals, deltas, where=np.repeat(masks["svb_delta"], nr))
+    return vals, vlens
+
+
+def _check_slots(name, rows, got, want):
+    """The layout trusts the cost matrix: a kernel's row sizes must equal
+    the slots the costs gave them, or the bytes would land shifted."""
+    bad = np.flatnonzero(got != want)
+    if bad.size:
+        i = int(bad[0])
+        raise ValueError(
+            f"{name} encoded row {int(rows[i])} to {int(got[i])} bytes, but "
+            f"its cost gave a {int(want[i])}-byte slot")
 
 
 def decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
@@ -1800,4 +1882,17 @@ _DECODERS = {
     "rle": _rle_decode_rows,
     "fsst": _fsst_decode_rows,
     "ef": ef_decode_rows,
+}
+
+
+# name -> whole-batch encode kernel (flat, offsets) -> (enc, enc_offsets)
+# for every codec outside the svb family (encode_rows runs those in its
+# one pass)
+_ENCODERS = {
+    "bitpack": partial(_bitpack_encode_rows, frame_of_ref=False),
+    "for": partial(_bitpack_encode_rows, frame_of_ref=True),
+    "dict": _dict_encode_rows,
+    "rle": _rle_encode_rows,
+    "fsst": _fsst_encode_rows,
+    "ef": ef_encode_rows,
 }

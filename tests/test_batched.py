@@ -66,12 +66,25 @@ def test_auto_selection_matches_single_array_selector():
 
 
 def test_row_costs_exact():
-    arrays, flat, offsets = make_rows(EDGE_LENGTHS, gen_mixed)
-    costs = batched.row_costs(flat, offsets, batched.VECTOR_COST_CODECS)
-    for i, a in enumerate(arrays):
-        for j, name in enumerate(batched.VECTOR_COST_CODECS):
-            want = len(select.REGISTRY[name].encode(a))
-            assert costs[i, j] == want, f"row {i} codec {name}: {costs[i, j]} != {want}"
+    """Every cost column equals len(encode) per row — including rle rows
+    whose runs pass 255 values (2-byte run lengths): 256-value runs at
+    every alignment mod 8 beside a 255-value run, and, in a second batch,
+    runs of 300 and 70000 values (a 3-byte run length)."""
+    arrays, _, _ = make_rows(EDGE_LENGTHS, gen_mixed)
+    long_runs = [np.concatenate([np.arange(k, dtype=np.uint32),
+                                 np.full(256, 9, np.uint32)]) for k in range(8)]
+    long_runs.append(np.full(255, 3, np.uint32))
+    longer = [np.repeat(np.array([5, 9, 5], np.uint32), [300, 70000, 40])]
+    for batch in (arrays + long_runs, arrays + longer):
+        flat = np.concatenate(batch)
+        offsets = np.concatenate(
+            [[0], np.cumsum([a.size for a in batch])]).astype(np.int64)
+        costs = batched.row_costs(flat, offsets, batched.VECTOR_COST_CODECS)
+        for i, a in enumerate(batch):
+            for j, name in enumerate(batched.VECTOR_COST_CODECS):
+                want = len(select.REGISTRY[name].encode(a))
+                assert costs[i, j] == want, \
+                    f"row {i} codec {name}: {costs[i, j]} != {want}"
 
 
 def test_fsst_cost_vectorized_exact():
@@ -238,6 +251,115 @@ def test_svb_family_mixed_batch_reads_rows_in_place(monkeypatch):
     for i, a in enumerate(arrays):
         np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a)
         np.testing.assert_array_equal(pvals[pvoff[i]:pvoff[i + 1]], a[:6])
+
+
+def _svb_row(rng, n):
+    """Mixed magnitudes led by one 4-byte value: svb beats bitpack/FOR."""
+    v = (rng.integers(1, 2 ** 31, n) >> rng.integers(0, 31, n)).astype(np.uint32)
+    v[:1] = 2 ** 31 + 3
+    return v
+
+
+def _svb0124_row(rng, n):
+    """Zero-heavy, ending in zeros: the zero-length stores land at the
+    row's end and spill 4 bytes into whatever slot follows."""
+    v = np.where(rng.random(n) < 0.7, 0, rng.integers(1, 1 << 20, n))
+    v[-3:] = 0
+    return v.astype(np.uint32)
+
+
+def _svb_delta_row(rng, n):
+    return (2 ** 30 + np.cumsum(rng.integers(1, 100, n))).astype(np.uint32)
+
+
+def test_auto_encode_spill_boundaries_row_by_row():
+    """The one svb-family pass writes its 4-byte stores (surplus bytes
+    included) before the other codecs fill their slots: tiny bitpack (2 B),
+    FOR (10 B), rle (16 B) and dict rows sit between svb-family rows, with
+    EDGE_LENGTHS rows, empty rows and a trailing empty row.  A surplus
+    store landing in a neighbour's slot after that slot was written shows
+    up as a wrong row."""
+    rng = np.random.default_rng(17)
+    tiny = {
+        "bitpack": np.tile(np.array([1, 0], np.uint32), 4),
+        "for": np.repeat(np.array([5, 6], np.uint32), 20),
+        "rle": np.repeat(np.array([7, 900000], np.uint32), 200),
+        "dict": rng.choice(np.array([7, 2 ** 30 + 1, 2 ** 31 + 5], np.uint32),
+                           64),
+    }
+    family = [_svb_row, _svb0124_row, _svb_delta_row]
+    arrays = []
+    for i, n in enumerate([n for n in EDGE_LENGTHS if n] * 3):
+        arrays.append(family[i % 3](rng, n))
+        arrays.append(list(tiny.values())[i % 4])
+        if i % 5 == 0:
+            arrays.append(np.zeros(0, np.uint32))
+        arrays.append(gen_mixed(EDGE_LENGTHS[i % len(EDGE_LENGTHS)]))
+    arrays.append(np.zeros(0, np.uint32))
+    flat = np.concatenate(arrays)
+    offsets = np.concatenate(
+        [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
+    out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto")
+    names = [batched.CODEC_NAMES[c] for c in cids]
+    assert {"svb", "svb0124", "svb_delta", *tiny} <= set(names)
+    for i, a in enumerate(arrays):
+        assert out[ooff[i]:ooff[i + 1]].tobytes() == \
+            select.REGISTRY[names[i]].encode(a), f"row {i} {names[i]}"
+    n_toks = np.array([a.size for a in arrays], dtype=np.int64)
+    vflat, voff = batched.decode_rows(out, ooff, n_toks, cids)
+    np.testing.assert_array_equal(vflat, flat)
+    np.testing.assert_array_equal(voff, offsets)
+
+
+def test_auto_svb_family_encode_is_one_pass(monkeypatch):
+    """An auto batch whose rows all select svb, svb0124 or svb_delta is
+    encoded by ONE _svb_encode_rows pass over the rows in place — no
+    per-codec subset copy, no pass per codec."""
+    def no_subset(*args):
+        raise AssertionError("svb-family rows must be encoded in place")
+
+    calls = []
+    one_pass = batched._svb_encode_rows
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return one_pass(*args, **kwargs)
+
+    monkeypatch.setattr(batched, "_subset_rows", no_subset)
+    monkeypatch.setattr(batched, "_svb_encode_rows", counted)
+    rng = np.random.default_rng(23)
+    family = [_svb_row, _svb0124_row, _svb_delta_row]
+    arrays = [family[i % 3](rng, n) if n else np.zeros(0, np.uint32)
+              for i, n in enumerate(EDGE_LENGTHS * 3)]
+    flat = np.concatenate(arrays)
+    offsets = np.concatenate(
+        [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
+    out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto")
+    assert {batched.CODEC_NAMES[c] for c in cids} == {"svb", "svb0124",
+                                                      "svb_delta"}
+    assert len(calls) == 1
+    for i, a in enumerate(arrays):
+        name = batched.CODEC_NAMES[cids[i]]
+        assert out[ooff[i]:ooff[i + 1]].tobytes() == \
+            select.REGISTRY[name].encode(a), f"row {i} {name}"
+
+
+def test_encode_rejects_cost_that_disagrees_with_kernel(monkeypatch):
+    """The layout trusts the cost matrix: a cost one byte off must raise,
+    naming the codec and row, instead of writing shifted bytes — in a
+    mixed batch and in one where the codec holds every row."""
+    exact = batched._rle_costs
+    monkeypatch.setattr(batched, "_rle_costs",
+                        lambda *args: exact(*args) + 1)
+    runs = np.repeat(np.array([7, 900000], np.uint32), 200)
+    rng = np.random.default_rng(3)
+    for arrays in ([_svb_row(rng, 50), runs, _svb_row(rng, 9)],
+                   [np.zeros(0, np.uint32), runs, runs]):
+        flat = np.concatenate(arrays)
+        offsets = np.concatenate(
+            [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
+        with pytest.raises(ValueError, match="rle encoded row 1 "):
+            batched.encode_rows(flat, offsets, codec="auto")
 
 
 def test_decode_rows_rejects_unknown_codec_id():
@@ -430,42 +552,84 @@ def test_row_costs_prune_matches_exact_selection():
     """prune=True may relax the dict COLUMN to a proven lower bound, but
     the matrix minimum and the first-minimum argmin (= selector winner,
     incl. candidate-priority ties) must be IDENTICAL to the exact matrix —
-    on dict winners, rle winners, near-ties, low-byte collisions (the
-    bound's weakest case: distinct values sharing one low byte), empties,
-    and the fsst-extended candidate set."""
+    on dict winners, rle winners, near-ties, exact dict == rle ties (dict
+    comes first, so it keeps the win: the bound may prune only STRICTLY
+    above the later candidates), low-bit collisions (the bound's weakest
+    case: distinct values sharing their low 8 or 10 bits), empties, rows
+    longer than the 1024-bucket projection of a long-row batch, a batch of
+    more than 2^18 rows (past the presence-table guard, where the dict
+    column stays exact), and the fsst-extended candidate set (fsst comes
+    after dict)."""
     rng = np.random.default_rng(5)
-    arrays = []
-    for i in range(600):
-        kind = i % 6
-        n = int(rng.integers(0, 50)) if kind == 5 else int(rng.integers(1, 400))
-        if kind == 0:    # dict-friendly: 3 distinct values across uint32
-            vals = rng.choice(np.array([7, 2**30 + 1, 2**31 + 5], np.uint32), n)
-        elif kind == 1:  # rle-friendly runs
-            vals = np.repeat(rng.integers(0, 1000, max(n // 20, 1))
-                             .astype(np.uint32), 20)[:n]
-        elif kind == 2:  # low-byte collisions: distinct values, one low byte
-            vals = (rng.integers(0, 50, n).astype(np.uint32)
-                    << np.uint32(8)) + np.uint32(7)
-        elif kind == 3:
-            vals = rng.integers(0, 255, n).astype(np.uint32)
-        elif kind == 4:
-            vals = np.sort(rng.integers(0, 2**31, n).astype(np.uint32))
-        else:
-            vals = rng.integers(0, 2**16, n).astype(np.uint32)
-        arrays.append(vals)
-    arrays.append(np.zeros(0, np.uint32))
-    flat = np.concatenate(arrays).astype(np.uint32)
-    off = np.concatenate(
-        [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
+
+    def rows_to_batch(arrays):
+        flat = np.concatenate(arrays).astype(np.uint32)
+        off = np.concatenate(
+            [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
+        return flat, off
+
+    def mix(count, lo, hi):
+        arrays = []
+        for i in range(count):
+            kind = i % 7
+            n = int(rng.integers(0, 50)) if kind == 5 else int(rng.integers(lo, hi))
+            if kind == 0:    # dict-friendly: 3 distinct values across uint32
+                vals = rng.choice(np.array([7, 2**30 + 1, 2**31 + 5], np.uint32), n)
+            elif kind == 1:  # rle-friendly runs
+                vals = np.repeat(rng.integers(0, 1000, max(n // 20, 1))
+                                 .astype(np.uint32), 20)[:n]
+            elif kind == 2:  # low-byte collisions: distinct values, one low byte
+                vals = (rng.integers(0, 50, n).astype(np.uint32)
+                        << np.uint32(8)) + np.uint32(7)
+            elif kind == 3:
+                vals = rng.integers(0, 255, n).astype(np.uint32)
+            elif kind == 4:
+                vals = np.sort(rng.integers(0, 2**31, n).astype(np.uint32))
+            elif kind == 6:  # distinct values sharing their low 10 bits
+                vals = (rng.integers(0, 50, n).astype(np.uint32)
+                        << np.uint32(10)) + np.uint32(999)
+            else:
+                vals = rng.integers(0, 2**16, n).astype(np.uint32)
+            arrays.append(vals)
+        return arrays
+
+    # exact dict == rle == 20 bytes, every earlier candidate far above:
+    # two 4-byte values 2^31 + 5 apart (bitpack/FOR width 32), 30 each;
+    # the second pair shares its low 10 bits (projected count 1)
+    ties = [np.repeat(np.array([a, a + d], np.uint32), 30)
+            for a in (2**24 + 1, 2**25 + 7) for d in (2**31 + 5, 2**31 + 1024)]
+    # rle (25 B) wins, and dict's bound equals it (projected count 2, true
+    # count 3: exact dict 41 B): pruning at lb == rle would hand dict the
+    # first-minimum tie
+    x, y, z = 2**24 + 1, 2**24 + 1 + 2**31 + 1024, 2**25 + 3
+    ties.append(np.repeat(np.array([x, y, z], np.uint32), [33, 33, 34]))
+    short = mix(600, 1, 400) + ties + [np.zeros(0, np.uint32)]
+    long = mix(42, 600, 1500) + ties
+    # values colliding in their low bits: past the guard, the exact dict
+    # costs differ from any bound
+    huge = [rng.integers(0, 4, int(n)).astype(np.uint32) << np.uint32(10)
+            for n in rng.integers(0, 4, (1 << 18) + 5)]
     saw_dict_winner = False
-    for cand in (batched.VECTOR_COST_CODECS, batched.VECTOR_COST_CODECS_FULL):
-        exact = batched.row_costs(flat, off, cand)
-        pruned = batched.row_costs(flat, off, cand, prune=True)
-        np.testing.assert_array_equal(exact.min(axis=1), pruned.min(axis=1))
-        np.testing.assert_array_equal(np.argmin(exact, axis=1),
-                                      np.argmin(pruned, axis=1))
-        j = cand.index("dict")
-        # the relaxed column is a true LOWER bound (never above exact)
-        assert (pruned[:, j] <= exact[:, j]).all()
-        saw_dict_winner |= bool((np.argmin(exact, axis=1) == j).any())
+    for arrays in (short, long, huge):
+        flat, off = rows_to_batch(arrays)
+        for cand in (batched.VECTOR_COST_CODECS,
+                     batched.VECTOR_COST_CODECS_FULL):
+            exact = batched.row_costs(flat, off, cand)
+            pruned = batched.row_costs(flat, off, cand, prune=True)
+            np.testing.assert_array_equal(exact.min(axis=1), pruned.min(axis=1))
+            np.testing.assert_array_equal(np.argmin(exact, axis=1),
+                                          np.argmin(pruned, axis=1))
+            j = cand.index("dict")
+            # the relaxed column is a true LOWER bound (never above exact)
+            assert (pruned[:, j] <= exact[:, j]).all()
+            saw_dict_winner |= bool((np.argmin(exact, axis=1) == j).any())
+            if arrays is huge:
+                np.testing.assert_array_equal(pruned[:, j], exact[:, j])
+            else:
+                tie_rows = [i for i, a in enumerate(arrays)
+                            if any(a is t for t in ties)]
+                rle = cand.index("rle")
+                assert (exact[tie_rows[:-1], j] == exact[tie_rows[:-1], rle]).all()
+                assert (np.argmin(pruned[tie_rows], axis=1)
+                        == [j] * 4 + [rle]).all()
     assert saw_dict_winner  # the mix must actually exercise dict wins
